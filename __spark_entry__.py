@@ -1838,8 +1838,8 @@ BOOL_QUERIES = [
 def boolean_search_engine(spark, sf_dir):
     """Boolean (must/should/must_not) query through the physical
     index (index/query.py::boolean_search) — the reference stack's
-    opensearch-api `bool` query. One bucket-pruned postings scan
-    covers all three roles; the oracle recomputes Lucene bool
+    opensearch-api `bool` query. Each row runs as a bool tree
+    (index/booltree.py); the oracle recomputes Lucene bool
     semantics (conjunctive must, minimum_should_match=1 when no
     must, exclusion, unknown-must-term -> empty) plus BM25 scoring
     from the raw table. Same re-rank-by-original-id trick as the
@@ -1891,8 +1891,7 @@ def dsl_bool_search(spark, sf_dir):
 # _search bodies for the NESTED bool compiler (index/booltree.py):
 # bool-in-bool two deep, a numeric `range` filter leaf on a doc-values
 # field, an unscored `term` filter on the lang sidecar, and an
-# explicit minimum_should_match — none expressible by the flat
-# single-scan executor. Leaf numbering for the oracle: 0='data query',
+# explicit minimum_should_match. Leaf numbering for the oracle: 0='data query',
 # 1='spark', 2='merge', 3='spark', 4='data', 5='merge', 6='filter',
 # 7='sort' (parse order, phrase-free).
 NESTED_BOOL_BODIES = [

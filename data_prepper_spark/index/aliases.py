@@ -67,13 +67,20 @@ def update_aliases(registry_path: str, actions: list[dict]) -> None:
     reason the API exists: ALL actions commit in ONE atomic registry
     store, so a reader never observes the half-moved state of an
     alias swap ({remove: old, add: new} is the standard zero-downtime
-    cutover). Each action is {"add": {...put_alias kwargs...}} or
-    {"remove": {"alias": name}}; any invalid action aborts the whole
-    batch (nothing is applied)."""
+    cutover). Each action is {"add": {"alias", "index", optional
+    "filter", optional "write_index" (a rollover alias's write
+    generation — index/rollover.py)}} or {"remove": {"alias":
+    name}}; any other add key raises NotImplementedError, and any
+    invalid action aborts the whole batch (nothing is applied)."""
     reg = _load(registry_path)
     for act in actions:
         ((kind, spec),) = act.items()
         if kind == "add":
+            unknown = set(spec) - {"alias", "index", "filter", "write_index"}
+            if unknown:
+                raise NotImplementedError(
+                    f"alias add keys {sorted(unknown)}"
+                )
             entry = {"index": spec["index"]}
             if spec.get("filter") is not None:
                 if isinstance(spec["index"], list):
@@ -81,6 +88,8 @@ def update_aliases(registry_path: str, actions: list[dict]) -> None:
                         "filtered multi-index aliases"
                     )
                 entry["filter"] = spec["filter"]
+            if "write_index" in spec:
+                entry["write_index"] = spec["write_index"]
             reg[spec["alias"]] = entry
         elif kind == "remove":
             if spec["alias"] not in reg:

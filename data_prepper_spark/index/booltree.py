@@ -1,16 +1,16 @@
-"""Nested boolean query trees over the physical index — the part of
-the OpenSearch `bool` query the flat executor can't express.
+"""Boolean query trees over the physical index — the one executor
+for the OpenSearch `bool` query, flat or nested.
 
 The reference ships events into OpenSearch, whose users routinely send
 `_search` bodies that nest `bool` inside `bool` and mix scoring text
 clauses with non-scoring `filter` leaves (`range`/`term`/`terms`/
-`exists` on doc-values fields). The flat `boolean_search`
-(query.py:394) handles one level of text clauses; this module compiles
-an ARBITRARY tree with exact Lucene semantics:
+`exists` on doc-values fields). This module compiles an ARBITRARY
+tree with exact Lucene semantics; `dsl.search` sends every `bool` body
+here, and query.boolean_search translates its (must, should,
+must_not) rows into trees for it:
 
 * `must`   — every child matches; children's scores sum.
-* `filter` — every child matches; contributes NO score (the one
-  semantic the flat path approximates away).
+* `filter` — every child matches; contributes NO score.
 * `should` — with must/filter present: optional, score-only. Alone:
   at least `minimum_should_match` (default 1) children must match.
   An explicit integer `minimum_should_match` is honored in both
@@ -59,15 +59,15 @@ field" mapping. Any other field is analyzed text against the inverted
 index: `match` is the standard disjunctive (OR) BM25 clause over its
 analyzed tokens — a zero-token clause (e.g. all stopwords) matches
 NOTHING, OpenSearch's `zero_terms_query: none` default. `match_phrase`
-desugars to a conjunctive bool over its tokens (the documented
-divergence the flat DSL path already makes: adjacency is checked only
-by the dedicated positional executors). `range` requires a doc-values
+desugars to a conjunctive bool over its tokens (a documented
+divergence: adjacency is checked only by the dedicated positional
+executors). `range` requires a doc-values
 (or corpus-resolvable) field. `match_all` matches every live doc at
 score 0.
 
 Execution shape (the 100-TB story): ALL text leaves in the tree share
-ONE bucket-pruned postings scan — leaves are tagged into the query_id
-channel exactly like boolean_search's role trick, the decoded
+ONE bucket-pruned postings scan — leaf ids ride the decoder's
+query_id channel, the decoded
 (leaf, ord, score) frame is persisted once, and the set algebra above
 is per-leaf filters + ord-equi-joins on match sets (each a tiny
 fraction of the corpus). Doc-values leaves scan the vocabulary-thin
@@ -481,9 +481,13 @@ def _parse(node: dict, dv_cols: set, texts: list,
 
 def _expand_phrases(ir: _IR, analyze_py, texts: list) -> _IR:
     """Desugar phrase leaves into conjunctive bools of single-token
-    text leaves (needs the index's analyzer, hence a second pass)."""
+    text leaves (needs the index's analyzer, hence a second pass).
+    A repeated token scores once, as it does in a `match` clause. Each
+    leaf text is an analyzed token that the leaf path analyzes again;
+    that is the identity unless a stopword is the stem of a
+    non-stopword (stop runs before stem)."""
     if ir.kind == "phrase":
-        toks = analyze_py(ir.text)
+        toks = dict.fromkeys(analyze_py(ir.text))
         kids = []
         for t in toks:
             texts.append(t)
@@ -1578,7 +1582,7 @@ def bool_tree_search(
     query_id: int = 0,
     runtime: dict | None = None,
 ) -> DataFrame:
-    """Top-k over a nested bool tree. Returns the boolean_search shape
+    """Top-k over a bool tree. Returns the ranked-hits shape
     (query_id, rank, doc_id, score, repo, path, commit), tie-break
     (score desc, ord asc) — identical to every other ranked path."""
     matched = bool_tree_match(
@@ -1586,7 +1590,7 @@ def bool_tree_search(
     )
     # rank over a materialized query_id column (not a bare lit) so the
     # optimizer's WindowGroupLimit bounds each map partition to k rows
-    # before the single-partition merge — same shape as boolean_search
+    # before the single-partition merge
     matched = matched.withColumn(
         "query_id", F.lit(query_id).cast("long")
     )

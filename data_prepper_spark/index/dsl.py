@@ -30,8 +30,8 @@ one leaf), knn `filter` (pre-search predicate pushed into the
 vector scan), bool must/should/must_not/filter —
 ARBITRARILY NESTED, with range/term/terms/exists filter leaves on
 doc-values fields, minimum_should_match, and per-clause/per-node
-`boost` (booltree.py; flat text-only bool bodies keep the single-scan
-boolean_search executor), dis_max (tie_breaker), constant_score,
+`boost` (booltree.py — every bool body, flat or nested, compiles
+through that one tree executor), dis_max (tie_breaker), constant_score,
 boosting (negative_boost demotion), function_score (weight +
 field_value_factor functions with per-function filters, score_mode/
 boost_mode algebra), script_score (painless-lite: _score,
@@ -574,18 +574,6 @@ def _hybrid_hits(
     )
 
 
-def _clause_text(clause: dict) -> str:
-    """query text of a scoring leaf clause (for bool role strings)."""
-    ((kind, spec),) = clause.items()
-    if kind in ("match", "term", "match_phrase"):
-        text, _ = _field_arg(spec)
-        return str(text)
-    raise NotImplementedError(
-        f"bool sub-clause '{kind}' (supported: match, term, "
-        "match_phrase-as-terms)"
-    )
-
-
 def _terms_order(aconf: dict):
     """terms-agg `order` ({"_count"|"_key"|<metric>: "asc"|"desc"})
     -> (key, direction) or None for the default."""
@@ -596,32 +584,6 @@ def _terms_order(aconf: dict):
     if d not in ("asc", "desc"):
         raise ValueError(f"terms order direction '{d}'")
     return (k, d)
-
-
-def _is_flat_bool(spec: dict, dv_cols: set) -> bool:
-    """True when a bool body is expressible by the flat single-scan
-    executor (boolean_search): one level of text clauses only. Any
-    nesting, doc-values leaf (range/terms/exists, or term on a
-    sidecar field), or explicit minimum_should_match routes to the
-    tree compiler instead."""
-    if "minimum_should_match" in spec or "boost" in spec:
-        return False
-    for role in ("must", "should", "must_not", "filter"):
-        cl = spec.get(role, [])
-        cl = cl if isinstance(cl, list) else [cl]
-        for c in cl:
-            ((kind, s),) = c.items()
-            if kind not in ("match", "term", "match_phrase"):
-                return False
-            if kind == "term" and next(iter(s)) in dv_cols:
-                return False
-            # a per-clause boost needs the tree path's exact score
-            # composition — the flat single-scan executor has no
-            # per-term weight channel
-            ((_f, v),) = s.items()
-            if isinstance(v, dict) and float(v.get("boost", 1.0)) != 1.0:
-                return False
-    return True
 
 
 def search(
@@ -1034,39 +996,13 @@ def search(
             max_expansions=int(opts.get("max_expansions", 50)),
         )
     elif kind == "bool":
-        from .booltree import _dv_columns, bool_tree_match, bool_tree_search
+        from .booltree import bool_tree_match, bool_tree_search
 
-        if _is_flat_bool(spec, _dv_columns(spark, index_dir)):
-            roles = {"must": [], "should": [], "must_not": []}
-            for role in ("must", "should", "must_not", "filter"):
-                cl = spec.get(role, [])
-                cl = cl if isinstance(cl, list) else [cl]
-                # filter = unscored must; the FLAT path scores it — a
-                # documented divergence (ranking unchanged when every
-                # hit matches the filter terms). The tree path below
-                # implements filter exactly (unscored).
-                dest = "must" if role == "filter" else role
-                for c in cl:
-                    roles[dest].append(_clause_text(c))
-            bq = qdf(
-                "query_id long, must string, should string, must_not string",
-                (
-                    query_id,
-                    " ".join(roles["must"]),
-                    " ".join(roles["should"]),
-                    " ".join(roles["must_not"]),
-                ),
-            )
-            hits = q.boolean_search(spark, index_dir, bq, k=k)
-        else:
-            # nested sub-bools / doc-values filter leaves /
-            # minimum_should_match: the tree compiler (booltree.py)
-            hits = bool_tree_search(
-                spark, index_dir, node, k=k,
-                corpus_path=corpus_path, query_id=query_id,
-                runtime=_rt,
-            )
-            tree_node = node
+        hits = bool_tree_search(
+            spark, index_dir, node, k=k,
+            corpus_path=corpus_path, query_id=query_id, runtime=_rt,
+        )
+        tree_node = node
         if "aggs" in body:
             agg_matched = (
                 bool_tree_match(spark, index_dir, node, corpus_path, runtime=_rt)

@@ -78,13 +78,23 @@ def apply_lifecycle(
         entry = _load(registry_path)[alias]
         gens_now = _gens(entry)
         # first free generation number — len(gens) alone collides
-        # once retention has dropped old generations
+        # once retention has dropped old generations, and a name whose
+        # snapshot survives retention must never be reused: the new
+        # generation would match the stale snapshot, never be
+        # snapshotted, and retention would delete its only copy
         n = len(gens_now)
         while True:
             new_dir = os.path.join(
                 base_dir, new_index_template.format(alias=alias, n=n)
             )
-            if new_dir not in gens_now and not fsio.exists(new_dir):
+            if (
+                new_dir not in gens_now
+                and not fsio.exists(new_dir)
+                and not (
+                    snapshot_repo is not None
+                    and _has_snapshot(snapshot_repo, new_dir)
+                )
+            ):
                 break
             n += 1
         st = rollover(

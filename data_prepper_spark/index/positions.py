@@ -5,16 +5,16 @@ opensearch/.../BulkRetryStrategy ships the documents whose analyzed
 positions OpenSearch stores).
 
 The default build records per-(doc, term) tf only (tokens v3) — the
-right trade for BM25 top-k, where positions are dead weight. This
-module adds the classic Lucene option as an OPT-IN second artifact:
+right trade for BM25 top-k, where positions are dead weight. The
+classic Lucene option is an OPT-IN artifact:
 
   index_dir/positions/   (doc_id, term, positions array<int>)
 
-built by one extra corpus pass (`build_positions`) with the same
-Arrow-native tokenizer the main build uses. A production build would
-fold this into the single tokenize pass behind a BuildConfig flag;
-keeping it a separate stage here means the hot path pays nothing and
-the artifact is independently rebuildable (like `attach_doc_values`).
+`BuildConfig.positions=True` writes it inside the build's single
+tokenize pass, from the same flat token stream (index/build.py), so
+the default build pays nothing. `build_positions` rebuilds the same
+artifact for an existing index with one extra corpus pass (like
+`attach_doc_values`).
 
 `phrase_topk_positional` then answers exact and ordered-slop phrase
 queries WITHOUT touching the corpus: the positions scan prunes on a

@@ -636,101 +636,46 @@ def boolean_search(
     opensearch-api `must`/`should`/`must_not` clauses, Lucene
     BooleanQuery semantics) over the physical index:
 
-    * a doc matches iff it contains EVERY `must` term, NO `must_not`
-      term, and — when there are no must clauses — at least one
-      `should` term (minimum_should_match=1);
-    * score = sum of BM25 partials over the must terms plus any
-      matching should terms; must_not never contributes;
-    * a must term absent from the term dictionary can match nothing,
-      so that query returns zero rows (Lucene contract).
+    * a doc matches iff it contains EVERY analyzed `must` token, NO
+      `must_not` token, and — when there is no must token — at least
+      one `should` token (minimum_should_match=1);
+    * score = sum of BM25 partials over the must tokens plus any
+      matching should tokens; must_not never contributes;
+    * a must token absent from the term dictionary can match nothing,
+      so that query returns zero rows (Lucene contract), while a
+      build-time stopword inside a must clause is removed by the
+      analyzer exactly as the reference's stopped analyzer removes it;
+    * a row with neither a must nor a should token returns no rows.
 
     queries: DataFrame (query_id long, must string, should string,
     must_not string) — each clause a whitespace query string run
-    through the canonical tokenizer. Returns (query_id, rank,
-    doc_id, score, repo, path, commit).
+    through the index's analyzer. The table is request-sized: it is
+    collected, and each row becomes one `bool` tree with one `match`
+    leaf per distinct analyzed token, run by the tree compiler
+    (booltree.bool_tree_search); the per-row results are unioned.
+    Returns (query_id, rank, doc_id, score, repo, path, commit)."""
+    from .booltree import bool_tree_search
 
-    Execution shape: ONE bucket-pruned postings scan covers all three
-    roles — each (query, role, term) row is keyed by the composite
-    qkey = query_id*4 + role so the shared decoder needs no extra
-    column, then the role is peeled back off and one (query, ord)
-    aggregation evaluates match + exclusion + score together. The
-    query side stays broadcast throughout; no shuffle beyond the
-    single groupBy."""
     stats = load_stats(index_dir)
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    analyze = _query_analyzer(stats)
-    clauses = None
-    for role, coln in ((0, "must"), (1, "should"), (2, "must_not")):
-        part = queries.select(
-            "query_id",
-            F.lit(role).alias("role"),
-            F.explode(
-                F.array_distinct(analyze(F.coalesce(F.col(coln), F.lit(""))))
-            ).alias("term"),
-        )
-        clauses = part if clauses is None else clauses.unionByName(part)
-    # must arity counts ANALYZED tokens (post stop/stem, pre-
-    # dictionary): an out-of-vocabulary must term keeps _must_hit <
-    # _n_must forever -> empty result set (Lucene contract), while a
-    # build-time stopword inside a must clause is removed by the
-    # analyzer exactly as the reference's stopped analyzer removes it
-    n_must = (
-        clauses.filter(F.col("role") == 0)
-        .groupBy("query_id")
-        .agg(F.count("*").alias("_n_must"))
+    out = spark.createDataFrame(
+        [],
+        "query_id long, rank int, doc_id long, score double, "
+        "repo string, path string, commit string",
     )
-    terms = spark.read.parquet(os.path.join(index_dir, "terms"))
-    qt = (
-        clauses.join(terms, "term")
-        .withColumn("idf", _idf_col(n_docs))
-        .withColumn("qkey", F.col("query_id") * 4 + F.col("role"))
-        .select("qkey", "term_id", "idf", "bucket")
-    )
-    post = _pruned_postings(spark, index_dir, qt)
-    decoder = _make_decoder(stats["k1"], stats["b"], avgdl)
-    scored = (
-        post.join(
-            F.broadcast(
-                qt.select(F.col("qkey").alias("query_id"), "term_id", "idf")
-            ),
-            "term_id",
-        )
-        .select("query_id", "idf", "docs", "tfs", "dls")
-        .mapInPandas(decoder, schema="query_id long, doc_id long, partial double")
-        .withColumn("role", F.col("query_id") % 4)
-        .withColumn("query_id", F.expr("query_id DIV 4"))
-    )
-    scored = _anti_tombstones(spark, index_dir, scored)
-    agg = scored.groupBy("query_id", "doc_id").agg(
-        F.sum(
-            F.when(F.col("role") <= 1, F.col("partial")).otherwise(0.0)
-        ).alias("score"),
-        F.sum(F.when(F.col("role") == 0, 1).otherwise(0)).alias("_must_hit"),
-        F.sum(F.when(F.col("role") == 1, 1).otherwise(0)).alias("_should_hit"),
-        F.max(F.when(F.col("role") == 2, 1).otherwise(0)).alias("_excl"),
-    )
-    matched = (
-        agg.join(F.broadcast(n_must), "query_id", "left")
-        .withColumn("_n_must", F.coalesce(F.col("_n_must"), F.lit(0)))
-        .filter(
-            (F.col("_excl") == 0)
-            & (F.col("_must_hit") == F.col("_n_must"))
-            & ((F.col("_n_must") > 0) | (F.col("_should_hit") > 0))
-        )
-        .withColumnRenamed("doc_id", "ord")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("ord"))
-    topped = (
-        matched.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "ord", "score")
-    )
-    ident = spark.read.parquet(os.path.join(index_dir, "docs")).select(
-        "ord", "doc_id", "repo", "path", "commit"
-    )
-    return ident.join(F.broadcast(topped), "ord").select(
-        "query_id", "rank", "doc_id", "score", "repo", "path", "commit"
-    )
+    for r in queries.collect():
+        body = {
+            role: [
+                {"match": {"content": t}}
+                for t in dict.fromkeys(analyze_query_py(stats, r[role] or ""))
+            ]
+            for role in ("must", "should", "must_not")
+        }
+        if body["must"] or body["should"]:
+            out = out.unionByName(bool_tree_search(
+                spark, index_dir, {"bool": body}, k=k,
+                query_id=int(r["query_id"]),
+            ))
+    return out
 
 
 def expanded_search(
@@ -1692,13 +1637,11 @@ def simple_query_string(
     `simple_query_string` default operators): whitespace-separated
     tokens where `+term` is a must clause, `-term` a must_not clause,
     and bare terms are should clauses (minimum_should_match=1 when no
-    must); delegates to boolean_search. The operator split is pure
-    Catalyst (filter/transform over the split array) so a
-    million-row query workload table parses distributed, no driver
-    round-trip.
+    must); parse_simple_queries splits the operators, then
+    boolean_search runs each row as a bool tree.
 
-    queries: (query_id long, query string). Returns the
-    boolean_search shape."""
+    queries: (query_id long, query string), request-sized. Returns
+    the boolean_search shape."""
     return boolean_search(spark, index_dir, parse_simple_queries(queries), k=k)
 
 

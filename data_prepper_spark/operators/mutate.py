@@ -47,16 +47,6 @@ def ensure_event_type(df: DataFrame, event_type: str = "EVENT") -> DataFrame:
     return df.withColumn(EVENT_TYPE_COL, F.lit(event_type))
 
 
-def add_tags(df: DataFrame, tags: list[str], when: str | None = None) -> DataFrame:
-    df = ensure_tags(df)
-    new = F.array_union(F.col(TAGS_COL), F.array(*[F.lit(t) for t in tags]))
-    if when is None:
-        return df.withColumn(TAGS_COL, new)
-    return df.withColumn(
-        TAGS_COL, F.when(dp_expr(when), new).otherwise(F.col(TAGS_COL))
-    )
-
-
 def add_entries(df: DataFrame, entries: list[dict]) -> DataFrame:
     """add_entries (AddEntryProcessor.java:39 / config :61-64): each
     entry has `key` (or `metadata_key` -> `_meta_*` column) plus one of

@@ -59,24 +59,6 @@ def streaming_remove_duplicates(
     )
 
 
-def route_to_sinks(
-    events: DataFrame,
-    routes: dict[str, str],
-    sink_factory,
-):
-    """Streaming router: one filtered writeStream per route (the
-    reference copies events to every matching sink; each branch here
-    re-reads the same source — logical copies).
-
-    sink_factory(name, df) -> DataStreamWriter (caller configures
-    format/checkpoint per sink)."""
-    writers = []
-    for name, expr in routes.items():
-        branch = events.filter(dp_expr(expr))
-        writers.append(sink_factory(name, branch))
-    return writers
-
-
 def stateful_aggregate_count(
     events: DataFrame,
     keys: list[str],

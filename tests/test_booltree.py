@@ -10,13 +10,16 @@ import os
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from data_prepper_spark.index import query as q
 from data_prepper_spark.index.booltree import bool_tree_match, bool_tree_search
 from data_prepper_spark.index.dsl import search
-from data_prepper_spark.oracle import B, K1, build_term_stats, corpus_doc_ids
-from data_prepper_spark.tokenizer import tokenize_series
+from data_prepper_spark.oracle import corpus_doc_ids
+
+from bool_reference import _eval, _ref_hits, _toks, build_ref
 
 
 @pytest.fixture(scope="module")
@@ -45,270 +48,9 @@ def dv_index(spark, dv_corpus, tmp_path_factory):
     return d
 
 
-# ---------------------------------------------------------------------------
-# pandas reference: exact Lucene bool semantics over the raw corpus
-# ---------------------------------------------------------------------------
-
-
 @pytest.fixture(scope="module")
 def ref(dv_corpus):
-    corpus = pd.read_parquet(dv_corpus)
-    postings, docs = build_term_stats(corpus)
-    n = len(docs)
-    avgdl = docs["dl"].mean()
-    dfreq = postings.groupby("term")["doc_id"].nunique()
-    dl = dict(zip(docs["doc_id"], docs["dl"]))
-    part = {}
-    for r in postings.itertuples():
-        idf = math.log(1 + (n - dfreq[r.term] + 0.5) / (dfreq[r.term] + 0.5))
-        d = dl[r.doc_id]
-        part[(r.doc_id, r.term)] = (
-            idf * r.tf * (K1 + 1) / (r.tf + K1 * (1 - B + B * d / avgdl))
-        )
-    corpus = corpus.assign(doc_id=corpus_doc_ids(corpus))
-    meta = corpus.set_index("doc_id")[["lang", "n_chars"]]
-    return {"part": part, "meta": meta, "doc_ids": list(meta.index),
-            "dfreq": dfreq}
-
-
-def _toks(text: str) -> list:
-    return list(dict.fromkeys(tokenize_series(pd.Series([text]))[0]))
-
-
-def _lev1(a: str, b: str) -> bool:
-    """Levenshtein distance <= 1 (plain, no transposition credit)."""
-    if a == b:
-        return True
-    la, lb = len(a), len(b)
-    if abs(la - lb) > 1:
-        return False
-    if la == lb:
-        return sum(x != y for x, y in zip(a, b)) == 1
-    if la > lb:
-        a, b, la, lb = b, a, lb, la
-    i = 0
-    while i < la and a[i] == b[i]:
-        i += 1
-    return a[i:] == b[i + 1:]
-
-
-def _expand_ref(pat: str, mode: str, ref: dict, cap: int) -> list:
-    """Reference dictionary expansion: df-descending, term-ascending
-    tie-break, capped at `cap` — the scoring_boolean rewrite."""
-    import re as _re
-
-    dfreq = ref["dfreq"]
-    if mode == "prefix":
-        hit = [t for t in dfreq.index if t.startswith(pat)]
-    elif mode == "wildcard":
-        rx = _re.compile(
-            "^" + "".join(
-                ".*" if c == "*" else "." if c == "?" else _re.escape(c)
-                for c in pat
-            ) + "$"
-        )
-        hit = [t for t in dfreq.index if rx.match(t)]
-    elif mode == "regexp":
-        rx = _re.compile(pat)
-        hit = [t for t in dfreq.index if rx.fullmatch(t)]
-    else:  # fuzzy
-        hit = [t for t in dfreq.index if _lev1(pat, t)]
-    hit.sort(key=lambda t: (-dfreq[t], t))
-    return hit[:cap]
-
-
-def _eval(node: dict, doc: int, ref: dict) -> tuple[bool, float]:
-    """(matches, score) of `node` for one doc — the independent
-    semantics the engine must reproduce."""
-    ((kind, spec),) = node.items()
-    meta, part = ref["meta"], ref["part"]
-    if kind == "match_all":
-        return True, 0.0
-    if kind in ("prefix", "wildcard", "fuzzy", "regexp"):
-        ((_f, v),) = spec.items()
-        pat = v.get("value", v.get("query")) if isinstance(v, dict) else v
-        cap = int(v.get("max_expansions", 50)) if isinstance(v, dict) else 50
-        boost = float(v.get("boost", 1.0)) if isinstance(v, dict) else 1.0
-        terms = _expand_ref(str(pat), kind, ref, cap)
-        hit = any((doc, t) in part for t in terms)
-        s = sum(part.get((doc, t), 0.0) for t in terms)
-        return hit, s * boost if hit else 0.0
-    if kind == "range":
-        ((field, val),) = spec.items()
-        v = meta.loc[doc, field]
-        ok = all(
-            (op != "gte" or v >= x) and (op != "gt" or v > x)
-            and (op != "lte" or v <= x) and (op != "lt" or v < x)
-            for op, x in val.items()
-        )
-        return ok, 0.0
-    if kind in ("term", "terms") and next(iter(spec)) in ("lang", "n_chars"):
-        ((field, val),) = spec.items()
-        v = meta.loc[doc, field]
-        ok = v in val if kind == "terms" else v == val
-        return ok, 0.0
-    if kind in ("match", "term"):
-        ((_f, v),) = spec.items()
-        text = v.get("query", v.get("value")) if isinstance(v, dict) else v
-        boost = float(v.get("boost", 1.0)) if isinstance(v, dict) else 1.0
-        s = sum(part.get((doc, t), 0.0) for t in _toks(str(text)))
-        hit = any((doc, t) in part for t in _toks(str(text)))
-        return hit, s * boost if hit else 0.0
-    if kind == "match_phrase":
-        ((_f, v),) = spec.items()
-        toks = _toks(str(v))
-        if not toks or not all((doc, t) in part for t in toks):
-            return False, 0.0
-        return True, sum(part[(doc, t)] for t in toks)
-    if kind == "dis_max":
-        subs = [_eval(c, doc, ref) for c in spec.get("queries", [])]
-        hits = [s for ok, s in subs if ok]
-        if not hits:
-            return False, 0.0
-        tb = float(spec.get("tie_breaker", 0.0))
-        best = max(hits)
-        return True, (best + tb * (sum(hits) - best)) * float(
-            spec.get("boost", 1.0)
-        )
-    if kind == "constant_score":
-        ok, _ = _eval(spec["filter"], doc, ref)
-        return ok, float(spec.get("boost", 1.0)) if ok else 0.0
-    if kind == "boosting":
-        ok, s = _eval(spec["positive"], doc, ref)
-        if not ok:
-            return False, 0.0
-        nok, _ = _eval(spec["negative"], doc, ref)
-        nb = float(spec.get("negative_boost", 0.5))
-        return True, s * nb if nok else s
-    if kind == "function_score":
-        ok, s = _eval(spec.get("query", {"match_all": {}}), doc, ref)
-        if not ok:
-            return False, 0.0
-        fns = spec.get("functions")
-        if fns is None:
-            fns = [{k: v for k, v in spec.items()
-                    if k in ("field_value_factor", "weight")}]
-        vals = []
-        for f in fns:
-            if "filter" in f:
-                fok, _ = _eval(f["filter"], doc, ref)
-                if not fok:
-                    continue
-            v = 1.0
-            for dk in ("gauss", "exp", "linear"):
-                if dk not in f:
-                    continue
-                ((fld, dconf),) = f[dk].items()
-                x = float(meta.loc[doc, fld])
-                origin = float(dconf["origin"])
-                scale = float(dconf["scale"])
-                off = float(dconf.get("offset", 0.0))
-                dec = float(dconf.get("decay", 0.5))
-                dist = max(0.0, abs(x - origin) - off)
-                if dk == "gauss":
-                    sigma2 = -(scale ** 2) / (2.0 * math.log(dec))
-                    v = math.exp(-(dist ** 2) / (2.0 * sigma2))
-                elif dk == "exp":
-                    v = math.exp(math.log(dec) / scale * dist)
-                else:
-                    s2 = scale / (1.0 - dec)
-                    v = max(0.0, (s2 - dist) / s2)
-            if "field_value_factor" in f:
-                fvf = f["field_value_factor"]
-                x = float(meta.loc[doc, fvf["field"]]) * float(
-                    fvf.get("factor", 1.0)
-                )
-                mod = fvf.get("modifier", "none")
-                v = {
-                    "none": x,
-                    "log1p": math.log10(1 + x),
-                    "ln1p": math.log1p(x),
-                    "sqrt": math.sqrt(x),
-                    "square": x * x,
-                    "reciprocal": 1.0 / x,
-                }[mod]
-            if "weight" in f:
-                v *= float(f["weight"])
-            vals.append(v)
-        sm = spec.get("score_mode", "multiply")
-        if not vals:
-            S = 1.0
-        elif sm == "multiply":
-            S = math.prod(vals)
-        elif sm == "sum":
-            S = sum(vals)
-        elif sm == "avg":
-            S = sum(vals) / len(vals)
-        elif sm == "max":
-            S = max(vals)
-        elif sm == "min":
-            S = min(vals)
-        else:
-            S = vals[0]
-        if "max_boost" in spec:
-            S = min(S, float(spec["max_boost"]))
-        bm = spec.get("boost_mode", "multiply")
-        out = {
-            "multiply": s * S,
-            "sum": s + S,
-            "replace": S,
-            "max": max(s, S),
-            "min": min(s, S),
-            "avg": (s + S) / 2,
-        }[bm]
-        # min_score applies to the combined function score; the node
-        # boost wraps OUTSIDE (Lucene BoostQuery around
-        # FunctionScoreQuery)
-        if "min_score" in spec and out < float(spec["min_score"]):
-            return False, 0.0
-        return True, out * float(spec.get("boost", 1.0))
-    assert kind == "bool", kind
-    msm = spec.get("minimum_should_match")
-
-    def kids(role):
-        cl = spec.get(role, [])
-        return cl if isinstance(cl, list) else [cl]
-
-    score = 0.0
-    for c in kids("must"):
-        ok, s = _eval(c, doc, ref)
-        if not ok:
-            return False, 0.0
-        score += s
-    for c in kids("filter"):
-        ok, _ = _eval(c, doc, ref)
-        if not ok:
-            return False, 0.0
-    n_hit = 0
-    for c in kids("should"):
-        ok, s = _eval(c, doc, ref)
-        if ok:
-            n_hit += 1
-            score += s
-    has_pos = bool(kids("must")) or bool(kids("filter"))
-    # Lucene: should is optional beside must/filter; alone it demands
-    # minimum_should_match (default 1); a bool with no positive clause
-    # at all (pure must_not) matches everything
-    if not kids("should"):
-        need = 0
-    else:
-        need = msm if msm is not None else (0 if has_pos else 1)
-    if n_hit < need:
-        return False, 0.0
-    for c in kids("must_not"):
-        ok, _ = _eval(c, doc, ref)
-        if ok:
-            return False, 0.0
-    return True, score * float(spec.get("boost", 1.0))
-
-
-def _ref_hits(tree: dict, ref: dict) -> list:
-    out = []
-    for d in ref["doc_ids"]:
-        ok, s = _eval(tree, d, ref)
-        if ok:
-            out.append((d, round(s, 6)))
-    return sorted(out)
+    return build_ref(pd.read_parquet(dv_corpus))
 
 
 def _engine_hits(spark, dv_index, tree, corpus_path=None) -> list:
@@ -396,24 +138,59 @@ def test_phrase_desugars_conjunctive(spark, dv_index, ref):
     assert _engine_hits(spark, dv_index, tree) == _ref_hits(tree, ref)
 
 
-def test_tree_matches_flat_executor(spark, dv_index):
-    """A flat text-only bool through the tree compiler must equal the
-    single-scan boolean_search executor (same semantics, two paths)."""
-    tree = {"bool": {
-        "must": [{"match": {"content": "bloloba"}}],
-        "should": [{"match": {"content": "gunaba"}}],
-        "must_not": [{"match": {"content": "dinaba"}}],
-    }}
-    a = _engine_hits(spark, dv_index, tree)
-    flat = q.boolean_search(
+def test_boolean_search_matches_reference(spark, dv_index, ref):
+    """boolean_search's (must, should, must_not) rows against the
+    independent reference: must conjunctive over analyzed tokens
+    (duplicates count once), should optional beside must and required
+    alone, an unknown must term or a must_not-only row -> no rows."""
+
+    def tree(must, should, must_not):
+        return {"bool": {
+            role: [{"match": {"content": t}} for t in _toks(text)]
+            for role, text in (
+                ("must", must), ("should", should), ("must_not", must_not)
+            )
+        }}
+
+    rows = [
+        (0, "bloloba skimuba", "gunaba", "dinaba"),
+        (1, "", "gunaba cestaba", ""),
+        (2, "Bloloba bloloba", "dropleba", None),
+        (3, "bloloba zzqqnotaterm", "gunaba", ""),
+        (4, "", "", "bloloba"),
+    ]
+    got = {qid: [] for qid, *_ in rows}
+    for r in q.boolean_search(
         spark, dv_index,
         spark.createDataFrame(
-            [(0, "bloloba", "gunaba", "dinaba")],
-            "query_id long, must string, should string, must_not string",
+            rows, "query_id long, must string, should string, must_not string",
         ),
         k=10**6,
-    ).select("doc_id", F.round("score", 6).alias("s")).collect()
-    assert a == sorted((r["doc_id"], r["s"]) for r in flat)
+    ).select("query_id", "doc_id", F.round("score", 6).alias("s")).collect():
+        got[r["query_id"]].append((r["doc_id"], r["s"]))
+    for qid in (0, 1, 2):
+        want = _ref_hits(tree(*(x or "" for x in rows[qid][1:])), ref)
+        assert sorted(got[qid]) == want and want, qid
+    assert got[3] == [] and got[4] == []
+
+
+def test_reanalysis_of_analyzed_tokens_is_identity(corpus_pdf):
+    """boolean_search and match_phrase desugaring turn ANALYZED tokens
+    into leaf texts, which the leaf path analyzes again: on the
+    fixture corpus that second pass returns each token unchanged,
+    with the stop and stem filters on."""
+    from data_prepper_spark.index.query import analyze_query_py
+
+    for stats in (
+        {},
+        {"stopwords": ["the", "a", "of", "init"],
+         "stemmer": "minimal_english"},
+    ):
+        toks = set()
+        for text in corpus_pdf["content"].head(200):
+            toks.update(analyze_query_py(stats, text))
+        assert len(toks) > 1000
+        assert all(analyze_query_py(stats, t) == [t] for t in toks)
 
 
 # ---------------------------------------------------------------------------
@@ -431,6 +208,95 @@ def test_dsl_routes_nested_bool(spark, dv_index, dv_corpus, ref):
         ).collect()
     )
     assert got == _ref_hits(NESTED_TREE, ref)
+
+
+def _dsl_hits(spark, index_dir, tree) -> list:
+    got = search(spark, index_dir, {"query": tree, "size": 10**6}).hits
+    return sorted(
+        (r["doc_id"], r["s"])
+        for r in got.select("doc_id", F.round("score", 6).alias("s")).collect()
+    )
+
+
+def test_dsl_multi_token_match_in_must_is_disjunctive(spark, dv_index, ref):
+    """A multi-token `match` inside `must` is an OR over its tokens,
+    so it matches more docs than requiring every token."""
+    tree = {"bool": {"must": [{"match": {"content": "cestaba dropleba"}}]}}
+    want = _ref_hits(tree, ref)
+    both = _ref_hits({"bool": {"must": [
+        {"match": {"content": "cestaba"}}, {"match": {"content": "dropleba"}},
+    ]}}, ref)
+    assert len(want) > len(both) > 0
+    assert _dsl_hits(spark, dv_index, tree) == want
+
+
+def test_dsl_text_filter_is_unscored(spark, dv_index, ref):
+    """`filter` text leaves decide matching but add no score."""
+    tree = {"bool": {
+        "must": [{"match": {"content": "bloloba"}}],
+        "filter": [{"match": {"content": "cestaba"}}],
+    }}
+    want = _ref_hits(tree, ref)
+    assert want and _dsl_hits(spark, dv_index, tree) == want
+
+
+def test_dsl_text_bool_total_hits_and_explain(spark, dv_index, ref):
+    """track_total_hits and explain work on a one-level text-only
+    bool: the total is the full match set, and each hit's explained
+    contributions sum to its score."""
+    tree = {"bool": {
+        "must": [{"match": {"content": "cestaba"}}],
+        "should": [{"match": {"content": "gunaba"}}],
+    }}
+    want = _ref_hits(tree, ref)
+    res = search(spark, dv_index, {
+        "query": tree, "size": 5, "track_total_hits": True, "explain": True,
+    })
+    (trow,) = res.total.collect()
+    assert trow["total_hits"] == len(want) > 5
+    hits = {r["doc_id"]: r["score"] for r in res.hits.collect()}
+    top = sorted(want, key=lambda h: -h[1])[:5]
+    assert sorted(round(v, 6) for v in hits.values()) == sorted(
+        s for _, s in top
+    )
+    agg = {}
+    for r in res.explanation.collect():
+        agg[r["doc_id"]] = agg.get(r["doc_id"], 0.0) + r["contribution"]
+    assert agg.keys() == hits.keys()
+    for d, sc in hits.items():
+        assert agg[d] == pytest.approx(sc, rel=1e-9)
+
+
+def _bool_bodies(vocab: list):
+    """Random bool bodies one or two levels deep: must/should/
+    must_not/filter clauses over match/term/match_phrase leaves of 1-3
+    vocabulary tokens."""
+    text = st.lists(st.sampled_from(vocab), min_size=1, max_size=3).map(
+        " ".join
+    )
+    leaf = st.builds(
+        lambda kind, t: {kind: {"content": t}},
+        st.sampled_from(("match", "term", "match_phrase")), text,
+    )
+
+    def bool_of(child):
+        return st.dictionaries(
+            st.sampled_from(("must", "should", "must_not", "filter")),
+            st.lists(child, min_size=1, max_size=3),
+            min_size=1,
+        ).map(lambda clauses: {"bool": clauses})
+
+    return bool_of(st.one_of(leaf, bool_of(leaf)))
+
+
+@settings(max_examples=20, deadline=None, derandomize=True)
+@given(data=st.data())
+def test_random_bool_bodies_match_reference(spark, dv_index, ref, data):
+    # 12 common terms (df 300-990 of 1,000 docs): random conjunctions
+    # of them still match, so most bodies have a non-empty answer
+    common = sorted(t for t, n in ref["dfreq"].items() if 300 <= n <= 990)
+    tree = data.draw(_bool_bodies(common[:: len(common) // 12]))
+    assert _dsl_hits(spark, dv_index, tree) == _ref_hits(tree, ref)
 
 
 def test_match_all_aggs_cover_corpus(spark, dv_index, dv_corpus):
@@ -659,10 +525,8 @@ def test_constant_score_inside_bool(spark, dv_index, ref):
 
 
 def test_dsl_routes_dismax_and_flat_boost(spark, dv_index, ref):
-    """Top-level dis_max routes through the tree compiler; a flat bool
-    whose leaf carries a boost must NOT take the flat single-scan path
-    (which has no per-term weight channel) — both must land on the
-    independent reference's scores."""
+    """Top-level dis_max and a one-level bool whose leaf carries a
+    boost both land on the independent reference's scores."""
     got = search(
         spark, dv_index, {"query": DISMAX_TREE, "size": 10**6}
     ).hits.select("doc_id", F.round("score", 6).alias("s")).collect()

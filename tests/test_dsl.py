@@ -80,32 +80,40 @@ def test_match_phrase_exact_and_slop(spark, index_dir, corpus_path, corpus_pdf):
     assert sl.count() > 0
 
 
-def test_bool_and_sqs(spark, index_dir):
-    body = {
-        "query": {"bool": {
-            "must": [{"match": {"content": "class"}}],
-            "should": [{"term": {"content": "def"}}],
-            "must_not": [{"term": {"content": "qqqqnope"}}],
-        }},
-        "size": 5,
-    }
-    got = search(spark, index_dir, body).hits
-    want = q.boolean_search(
-        spark, index_dir,
-        spark.createDataFrame(
-            [(0, "class", "def", "qqqqnope")],
-            "query_id long, must string, should string, must_not string",
-        ),
-        k=5,
-    )
-    r = _rows(got)
-    assert r == _rows(want) and r
+def test_bool_and_sqs(spark, index_dir, corpus_pdf):
+    """bool and simple_query_string bodies land on the independent
+    pandas reference (tests/bool_reference.py) over the full match
+    set."""
+    from pyspark.sql import functions as F
 
-    s = search(
-        spark, index_dir,
-        {"query": {"simple_query_string": {"query": "+class -qqqqnope"}}},
-    ).hits
-    assert s.count() > 0
+    from bool_reference import _ref_hits, build_ref
+
+    ref = build_ref(corpus_pdf)
+
+    def hits(body):
+        got = search(spark, index_dir, {**body, "size": 10**6}).hits
+        return sorted(
+            (r["doc_id"], r["s"])
+            for r in got.select(
+                "doc_id", F.round("score", 6).alias("s")
+            ).collect()
+        )
+
+    tree = {"bool": {
+        "must": [{"match": {"content": "class"}}],
+        "should": [{"term": {"content": "def"}}],
+        "must_not": [{"term": {"content": "qqqqnope"}}],
+    }}
+    want = _ref_hits(tree, ref)
+    assert want and hits({"query": tree}) == want
+
+    sqs = {"simple_query_string": {"query": "+class bloloba -guguba"}}
+    want = _ref_hits({"bool": {
+        "must": [{"match": {"content": "class"}}],
+        "should": [{"match": {"content": "bloloba"}}],
+        "must_not": [{"match": {"content": "guguba"}}],
+    }}, ref)
+    assert want and hits({"query": sqs}) == want
 
 
 def test_expansion_clauses(spark, index_dir):

@@ -178,3 +178,48 @@ def test_force_merge_delta_generation(spark, tmp_path):
     # idempotent: nothing left to merge
     assert apply_lifecycle(areg, "logs", str(tmp_path),
                            force_merge=True, spark=spark) == []
+
+
+def test_lifecycle_never_reuses_a_snapshotted_generation_name(tmp_path):
+    """Retention deletes old generation dirs but keeps their snapshots.
+    A later rollover must not recreate a deleted name: the new
+    generation would match the stale snapshot, never be snapshotted,
+    and retention would delete its only copy. Four fill+cycle rounds
+    with retain_generations=2 reach the first deleted name."""
+    base = str(tmp_path / "fam")
+    repo = str(tmp_path / "snaprepo")
+    reg = str(tmp_path / "aliases.json")
+
+    def fill(gen_dir, n_docs):
+        os.makedirs(gen_dir, exist_ok=True)
+        with open(os.path.join(gen_dir, "stats.json"), "w") as f:
+            json.dump({"n_docs": n_docs, "avgdl": 1.0}, f)
+        pd.DataFrame({"x": list(range(n_docs))}).to_parquet(
+            os.path.join(gen_dir, "part-data.parquet")
+        )
+
+    fill(os.path.join(base, "logs-gen0"), 10)
+    fill(os.path.join(base, "logs-gen1"), 11)
+    put_alias(reg, "logs", [os.path.join(base, "logs-gen0"),
+                            os.path.join(base, "logs-gen1")])
+    used = {"logs-gen0", "logs-gen1"}
+    docs = {"logs-gen0": 10, "logs-gen1": 11}
+    for cycle in range(4):
+        apply_lifecycle(
+            reg, "logs", base,
+            rollover_max_docs=5,
+            snapshot_repo=repo,
+            snapshot_after=1,
+            retain_generations=2,
+        )
+        name = os.path.basename(write_target(reg, "logs"))
+        assert name not in used, f"cycle {cycle} reused {name}"
+        used.add(name)
+        docs[name] = 20 + cycle
+        fill(write_target(reg, "logs"), docs[name])
+    # every snapshot in the repo holds the generation of its own name
+    for name in sorted(os.listdir(repo)):
+        out = str(tmp_path / "restored" / name)
+        restore_index(repo, name, out)
+        with open(os.path.join(out, "stats.json")) as f:
+            assert json.load(f)["n_docs"] == docs[name], name

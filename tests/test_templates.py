@@ -213,3 +213,32 @@ def test_update_aliases_atomic_batch(tmp_path):
     assert "live" in get_aliases(reg)  # the first remove did NOT land
     with pytest.raises(NotImplementedError, match="alias action"):
         update_aliases(reg, [{"rename": {"alias": "x"}}])
+
+
+def test_update_aliases_add_keeps_write_index(tmp_path):
+    """A batch add keeps a rollover alias's write_index; any other
+    unknown add key fails loudly instead of being dropped."""
+    from data_prepper_spark.index.aliases import (
+        get_aliases,
+        put_alias,
+        update_aliases,
+    )
+    from data_prepper_spark.index.rollover import write_target
+
+    reg = str(tmp_path / "aliases.json")
+    put_alias(reg, "logs", ["/idx/gen0"])
+    update_aliases(reg, [
+        {"remove": {"alias": "logs"}},
+        {"add": {"alias": "logs", "index": ["/idx/gen0", "/idx/gen1"],
+                 "write_index": "/idx/gen0"}},
+    ])
+    assert get_aliases(reg)["logs"]["write_index"] == "/idx/gen0"
+    assert write_target(reg, "logs") == "/idx/gen0"
+
+    with pytest.raises(NotImplementedError, match="is_hidden"):
+        update_aliases(reg, [
+            {"remove": {"alias": "logs"}},
+            {"add": {"alias": "logs", "index": "/idx/gen1",
+                     "is_hidden": True}},
+        ])
+    assert write_target(reg, "logs") == "/idx/gen0"  # batch aborted

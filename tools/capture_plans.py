@@ -142,6 +142,9 @@ def main():
         faceted_search,
     )
 
+    # boolean_search runs each row as a booltree.py bool tree: one
+    # bucket-pruned postings scan decodes every leaf, then hash joins
+    # on ord do the must/should/must_not set algebra
     bq = spark.createDataFrame(
         [(0, "data query", "spark", "slow")],
         "query_id long, must string, should string, must_not string",
