@@ -102,7 +102,8 @@ def ngram_logprob(
     model: DataFrame,
     n: int = 3,
     dest: str = "ngram_logprob",
-    id_col: str | None = None,
+    *,
+    id_col: str,
 ) -> DataFrame:
     """Score each document by its mean character-n-gram log
     probability under `model` (ngram_model output) — the cheap
@@ -116,12 +117,11 @@ def ngram_logprob(
 
     with N = total gram occurrences and V = distinct grams in the
     model; unseen grams get ln(1/(N+V)). Docs shorter than n chars
-    score NULL. Shape: explode -> broadcast model join (bounded by
-    |charset|^n) -> one groupBy mean. Pass `id_col` so the grouped
-    mean shuffles ONLY (id, logprob) rows and the full-width doc
-    joins back afterward (AQE's choice) — without it the group keys
-    are every column, which drags the text itself through the
-    exchange (fine for small frames, wrong at 100 TB)."""
+    score NULL. `id_col` is a unique row key. Shape: (id, gram)
+    explode -> broadcast model join (bounded by |charset|^n) -> one
+    per-id groupBy mean, so the shuffle carries ONLY (id, logprob)
+    rows -> left join back onto the full-width docs (every row kept
+    exactly once)."""
     stats = model.agg(
         F.sum("c").cast("double").alias("N"),
         F.count(F.lit(1)).cast("double").alias("V"),
@@ -134,37 +134,21 @@ def ngram_logprob(
         ),
     ).otherwise(F.array().cast("array<string>"))
 
-    def _score(src: DataFrame, keys: list[str]) -> DataFrame:
-        exploded = src.select(*keys, F.explode(grams).alias("gram"))
-        return (
-            exploded.join(F.broadcast(model), "gram", "left")
-            .crossJoin(F.broadcast(stats))
-            .withColumn(
-                "__lp",
-                F.log(
-                    (F.coalesce(F.col("c"), F.lit(0)).cast("double")
-                     + 1.0)
-                    / (F.col("N") + F.col("V"))
-                ),
-            )
-            .groupBy(*keys)
-            .agg(F.avg("__lp").alias(dest))
+    exploded = df.select(id_col, F.explode(grams).alias("gram"))
+    scored = (
+        exploded.join(F.broadcast(model), "gram", "left")
+        .crossJoin(F.broadcast(stats))
+        .withColumn(
+            "__lp",
+            F.log(
+                (F.coalesce(F.col("c"), F.lit(0)).cast("double") + 1.0)
+                / (F.col("N") + F.col("V"))
+            ),
         )
-
-    if id_col is not None:
-        # skinny shuffle: (id, gram) explode, per-id mean, join back
-        return df.join(
-            _score(df.select(id_col, text_col), [id_col]),
-            id_col, "left",
-        )
-    cols = list(df.columns)
-    scored = _score(df, cols)
-    # docs with no grams (len < n) dropped by the explode: restore
-    # them with NULL scores (audit-friendly — rows never vanish)
-    short = df.join(
-        scored.select(*cols), cols, "left_anti"
-    ).withColumn(dest, F.lit(None).cast("double"))
-    return scored.unionByName(short)
+        .groupBy(id_col)
+        .agg(F.avg("__lp").alias(dest))
+    )
+    return df.join(scored, id_col, "left")
 
 
 def c4_filters(

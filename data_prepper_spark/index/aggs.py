@@ -692,6 +692,16 @@ def sibling_bucket_metric(
         # j=100 and clamped to [0,1]. All window + fold algebra over
         # the bucket frame; n = total count.
         fracs = [float(x) for x in (conf or {})["fractions"]]
+        off = buckets.groupBy("query_id").count().filter(
+            F.col("count") != len(fracs)
+        ).take(1)
+        if off:
+            raise ValueError(
+                f"bucket_count_ks_test over "
+                f"'{(conf or {}).get('buckets_path')}': "
+                f"{off[0]['count']} buckets but {len(fracs)} fractions "
+                "(one fraction per bucket)"
+            )
         alts = list((conf or {}).get(
             "alternative", ["two_sided"]
         ))

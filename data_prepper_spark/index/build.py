@@ -1482,3 +1482,12 @@ def reindex(
 
 def load_stats(index_dir: str) -> dict:
     return json.loads(fsio.read_text(os.path.join(index_dir, "stats.json")))
+
+
+def delta_dirs(index_root: str) -> list[str]:
+    """The delta indexes (`delta=*` children) of a delta-tree root, in
+    sorted path order; [] when the root is absent."""
+    return [
+        p for p in fsio.listdir(index_root)
+        if fsio.basename(p).startswith("delta=")
+    ]

@@ -36,6 +36,7 @@ import os
 
 from .. import fsio
 from .aliases import _load, _store
+from .build import delta_dirs
 from .rollover import rollover, write_target
 from .snapshot import MANIFEST_NAME, snapshot_index
 
@@ -131,10 +132,7 @@ def apply_lifecycle(
                 continue
             is_delta_root = not fsio.exists(
                 os.path.join(g, "stats.json")
-            ) and any(
-                fsio.basename(p.rstrip("/")).startswith("delta=")
-                for p in (fsio.listdir(g) if fsio.exists(g) else [])
-            )
+            ) and bool(delta_dirs(g))
             if not is_delta_root:
                 continue
             if live_pits(g):

@@ -33,7 +33,9 @@ results.
 
 Scale shape: open/close are pure metadata (one listing + one small
 JSON write — no data copied, exactly like Lucene incRef on segment
-readers). Query cost equals `topk_deltas` over the pinned subset.
+readers). A query is a `query.QuerySession` over the pinned segment
+list — the same reader `topk_deltas` opens over the live tree — so it
+costs what a `topk_deltas` call over the pinned subset costs.
 """
 
 from __future__ import annotations
@@ -54,25 +56,12 @@ def _retired_dir(index_root: str) -> str:
     return os.path.join(index_root, "retired")
 
 
-def _tombstone_files(delta_dir: str) -> list[str]:
-    """The delta's tombstone parquet part files at this instant
-    (appended deletes create NEW part files — pinning the list pins
-    the delete state)."""
-    ts = os.path.join(delta_dir, "tombstones")
-    if not fsio.exists(ts):
-        return []
-    return sorted(
-        p for p in fsio.listdir(ts)
-        if fsio.basename(p).endswith(".parquet")
-    )
-
-
 def open_pit(index_root: str) -> str:
     """Pin the current delta tree; returns the PIT id. O(metadata)."""
-    deltas = sorted(
-        p for p in fsio.listdir(index_root)
-        if fsio.basename(p.rstrip("/")).startswith("delta=")
-    )
+    from .build import delta_dirs
+    from .query import tombstone_files
+
+    deltas = delta_dirs(index_root)
     if not deltas:
         raise ValueError(f"no delta=* indexes under {index_root}")
     pd_ = _pits_dir(index_root)
@@ -86,10 +75,10 @@ def open_pit(index_root: str) -> str:
     fsio.makedirs(pd_)
     token = {
         "id": pit_id,
-        "deltas": [fsio.basename(d.rstrip("/")) for d in deltas],
+        "deltas": [fsio.basename(d) for d in deltas],
         "tombstones": {
-            fsio.basename(d.rstrip("/")): [
-                fsio.basename(f) for f in _tombstone_files(d)
+            fsio.basename(d): [
+                fsio.basename(f) for f in tombstone_files(d)
             ]
             for d in deltas
         },
@@ -180,19 +169,18 @@ def topk_pit(
     queries: DataFrame,
     k: int = 10,
 ) -> DataFrame:
-    """Top-k BM25 over the PIT's frozen view: exactly
-    `query.topk_deltas` (global df across delta dictionaries, global
-    avgdl/N, per-delta ordinal resolution) restricted to the pinned
-    deltas and the pinned tombstone part-files. Rank-identical to
-    what `topk_deltas` returned at open time, regardless of later
-    ingests, deletes, or compactions (asserted in tests)."""
+    """Top-k BM25 over the PIT's frozen view: `query.topk_deltas` over
+    the pinned deltas, each with its pinned tombstone part files.
+    Rank-identical to what `topk_deltas` returned at open time,
+    regardless of later ingests, deletes, or compactions (asserted in
+    tests)."""
     from .query import topk_deltas
 
     tok = resolve_pit(index_root, pit_id)
     tfiles = {
         d: [
             os.path.join(d, "tombstones", f)
-            for f in tok["tombstones"][fsio.basename(d.rstrip("/"))]
+            for f in tok["tombstones"][fsio.basename(d)]
         ]
         for d in tok["resolved"]
     }

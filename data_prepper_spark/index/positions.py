@@ -718,12 +718,9 @@ def position_delta_dirs(index_root: str) -> list[str]:
     tree means some docs are invisible to phrase queries — fail loudly
     instead of silently under-matching)."""
     from .. import fsio
+    from .build import delta_dirs
 
-    dirs = sorted(
-        p
-        for p in fsio.listdir(index_root)
-        if os.path.basename(p.rstrip("/")).startswith("delta=")
-    )
+    dirs = delta_dirs(index_root)
     if not dirs:
         raise ValueError(f"no delta=* indexes under {index_root}")
     missing = [

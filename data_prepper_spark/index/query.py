@@ -22,6 +22,7 @@ idf = ln(1 + (N−df+0.5)/(df+0.5)); tie-break score desc, doc_id asc.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -33,7 +34,7 @@ from ..tokenizer import (
     stem_minimal_english_py,
     tokenize_col,
 )
-from .build import load_stats
+from .build import delta_dirs, load_stats
 from .codec import decode_many, to_signed
 
 
@@ -61,7 +62,7 @@ def _query_analyzer(stats: dict):
 
 def analyze_query_py(stats: dict, text: str) -> list[str]:
     """Driver-side twin of _query_analyzer for the single-query
-    serving paths (topk_one_cold / QuerySession.topk_one)."""
+    serving path (QuerySession.topk_one)."""
     from ..tokenizer import tokenize_series
 
     toks = tokenize_series(pd.Series([text])).iloc[0]
@@ -115,8 +116,7 @@ def query_terms(
 
 
 def _make_decoder(
-    k1: float, b: float, avgdl: float, with_query: bool = True,
-    chunk: int = 2048,
+    k1: float, b: float, avgdl: float, chunk: int = 2048,
 ):
     # block rows are FAT (≈1.3 KB varbyte payload -> ~70 decode
     # temporary bytes per encoded byte): sub-chunk each incoming Arrow
@@ -136,15 +136,13 @@ def _make_decoder(
                 dl = dl_v.astype(np.float64)
                 impact = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
                 idf = np.repeat(sub["idf"].to_numpy(np.float64), counts)
-                out = {
+                yield pd.DataFrame({
                     "doc_id": doc_ids,
                     "partial": idf * impact,
-                }
-                if with_query:
-                    out["query_id"] = np.repeat(
+                    "query_id": np.repeat(
                         sub["query_id"].to_numpy(np.int64), counts
-                    )
-                yield pd.DataFrame(out)
+                    ),
+                })
 
     return decode_score
 
@@ -1288,9 +1286,7 @@ def attach_doc_values_deltas(
     from .. import fsio
 
     done = 0
-    for d in sorted(fsio.listdir(index_root)):
-        if not fsio.basename(d.rstrip("/")).startswith("delta="):
-            continue
+    for d in delta_dirs(index_root):
         if fsio.isdir(os.path.join(d, "docvalues")):
             continue
         attach_doc_values(spark, d, corpus_path, cols=cols)
@@ -1314,13 +1310,7 @@ def faceted_search_deltas(
     (doc_count desc, value asc) applies after the merge, so the result
     is identical to faceting the compacted index (asserted in tests).
     Same O(#deltas) fan-in trade as topk_deltas."""
-    from .. import fsio
-
-    deltas = [
-        p
-        for p in fsio.listdir(index_root)
-        if fsio.basename(p.rstrip("/")).startswith("delta=")
-    ]
+    deltas = delta_dirs(index_root)
     if not deltas:
         raise ValueError(f"no delta=* indexes under {index_root}")
     parts = [
@@ -1691,10 +1681,10 @@ def _anti_tombstones(
 ) -> DataFrame:
     """Drop delete_by_query'd ords from a decoded match set (`col`
     holds ords). No-op when the index has no tombstones (one pyarrow
-    stat). EVERY index-backed match path routes through this —
-    phrase/boolean/expanded search, all facet paths, collapse,
-    significant_terms, the cold single-query server — so deleted docs
-    are invisible across the whole API surface, not just topk
+    stat). EVERY stateless index-backed match path outside the
+    QuerySession reader routes through this — phrase/boolean/expanded
+    search, all facet paths, collapse, significant_terms — so deleted
+    docs are invisible across the whole API surface, not just topk
     (ADVICE r03). The join is ord-on-ord; AQE picks the strategy (a
     1%-of-10^12 tombstone set must not be force-broadcast)."""
     tombs = _tombstone_ords(spark, index_dir)
@@ -1720,17 +1710,17 @@ def delete_by_query(spark: SparkSession, index_dir: str, query: str) -> int:
     skinny rows and zero postings bytes.
 
     Visibility: EVERY stateless index-backed path honors tombstones
-    immediately — topk/topk_after, phrase/boolean/expanded search,
+    immediately — topk/topk_one_cold (a QuerySession opened per
+    call), topk_after, phrase/boolean/expanded search,
     faceted/range/stats/cardinality/percentiles facets, collapse,
-    top_hits, significant_terms, topk_one_cold (all via
-    _anti_tombstones / the driver exclude set), and the positional
-    phrase paths (ordered + sloppy, via the ord->doc_id mapping in
-    positions._anti_tombstones_docids).
-    A warm QuerySession reads a snapshot taken at open; call
-    .refresh() to see later deletes (the Lucene open-IndexReader
-    contract). topk_deltas anti-joins each delta's OWN tombstone set
-    (the _bulk facade's delete path writes those); compaction then
-    expunges them physically."""
+    top_hits, significant_terms (via tombstone anti-joins), and the
+    positional phrase paths (ordered + sloppy, via the ord->doc_id
+    mapping in positions._anti_tombstones_docids).
+    A QuerySession pins the tombstone part files present at open, on
+    its single-query and batch paths alike; call .refresh() to see
+    later deletes (the Lucene open-IndexReader contract). topk_deltas
+    reads each delta's OWN tombstone files (the _bulk facade's delete
+    path writes those); compaction then expunges them physically."""
     stats = load_stats(index_dir)
     q = spark.createDataFrame([(0, query)], "query_id long, query string")
     qt = query_terms(spark, index_dir, q, stats["n_docs"]).select(
@@ -2856,359 +2846,289 @@ def _decode_rank_driver(blocks, idf_by_tid, stats, k: int, exclude=None):
     return uniq[order], sums[order]
 
 
-def _tombstone_ords_np(spark: SparkSession, index_dir: str):
-    """Tombstoned ords as a np.int64 array for the driver-decode
-    serving paths (None when the index has no tombstones). The set is
-    driver-resident only on these size-gated paths — the distributed
-    paths anti-join instead."""
-    tombs = _tombstone_ords(spark, index_dir)
-    if tombs is None:
-        return None
-    return tombs.toPandas()["ord"].to_numpy(np.int64)
+def tombstone_files(index_dir: str) -> list[str]:
+    """The index's tombstone parquet part files at this instant.
+    Deletes append NEW part files, so pinning this list pins the
+    delete state."""
+    from .. import fsio
+
+    ts = os.path.join(index_dir, "tombstones")
+    return [p for p in fsio.listdir(ts) if p.endswith(".parquet")]
 
 
-def topk_one_cold(
-    spark: SparkSession,
-    index_dir: str,
-    query: str,
-    k: int = 10,
-    query_id: int = 0,
-    with_docs: bool = False,
-    max_driver_postings: int = 5_000_000,
-):
-    """Ad-hoc single-query serve with NOTHING resident — every byte
-    comes off pushdown-pruned parquet scans. Three bounded jobs:
+@dataclass(frozen=True)
+class Segment:
+    """One immutable index directory plus the tombstone part files
+    pinned for it when a reader opened. A reader is a pinned list of
+    immutable files (the Delta Lake snapshot model): deletes appended
+    later land in new part files that a pinned segment never reads."""
 
-      1. terms scan filtered to the query's tokens (`term IN (...)`
-         pushed to parquet row groups) → matched dictionary rows;
-      2. postings scan pruned to the matched buckets (partition
-         directories) + term_ids (row-group stats) → the query's
-         encoded blocks, decoded/merged in driver numpy;
-      3. docs scan filtered to the k winning ords → identity resolve.
+    path: str
+    stats: dict
+    tombstones: tuple[str, ...]
 
-    Σ df (known from job 1, before any postings are read) gates the
-    driver decode; past max_driver_postings it falls back to the
-    distributed plan. Works at 10^12 docs because every scan is
-    pruned to the query's own rows. Returns the same pandas shape as
-    QuerySession.topk_one; rank-identity asserted in tests."""
-    import math
+    @classmethod
+    def open(cls, path: str, tombstones: list[str] | None = None) -> "Segment":
+        """Read stats.json and pin `tombstones` (default: the part
+        files present now). Pure metadata — no Spark job."""
+        if tombstones is None:
+            tombstones = tombstone_files(path)
+        return cls(path, load_stats(path), tuple(tombstones))
 
-    stats = load_stats(index_dir)
-    empty = pd.DataFrame(columns=["query_id", "rank", "doc_id", "score"])
-    toks = sorted(set(analyze_query_py(stats, query)))
-    if not toks:
-        return empty
-    tpdf = (
-        spark.read.parquet(os.path.join(index_dir, "terms"))
-        .filter(F.col("term").isin(toks))
-        .select("term_id", "df", "bucket")
-        .toPandas()
-    )
-    if tpdf.empty:
-        return empty
-    if float(tpdf["df"].sum()) > max_driver_postings:
-        q = spark.createDataFrame(
-            [(query_id, query)], "query_id long, query string"
-        )
-        res = topk(spark, index_dir, q, k=k)
-        if with_docs:
-            docs = spark.read.parquet(
-                os.path.join(index_dir, "docs")
-            ).select("doc_id", "repo", "path", "commit")
-            res = docs.join(F.broadcast(res), "doc_id").select(
-                "query_id", "rank", "doc_id", "score", "repo", "path",
-                "commit",
-            )
-        return (
-            res.toPandas().sort_values("rank").reset_index(drop=True)
-        )
-    n = float(stats["n_docs"])
-    idf = {
-        int(tid): math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        for tid, df in zip(tpdf["term_id"], tpdf["df"])
-    }
-    blocks = (
-        spark.read.parquet(os.path.join(index_dir, "postings"))
-        .filter(F.col("bucket").isin(sorted(set(map(int, tpdf["bucket"])))))
-        .filter(F.col("term_id").isin(list(idf)))
-        .select("term_id", "docs", "tfs", "dls")
-        .toPandas()
-    )
-    if blocks.empty:
-        return empty
-    top_ords, top_scores = _decode_rank_driver(
-        blocks, idf, stats, k, exclude=_tombstone_ords_np(spark, index_dir)
-    )
-    ident_cols = ["doc_id", "repo", "path", "commit"] if with_docs else [
-        "doc_id"
+
+# the stats.json fields every segment of one reader must agree on: the
+# query analyzer and the BM25 parameters apply to all segments at once
+_SHARED_SETTINGS = ("k1", "b", "stopwords", "stemmer")
+
+
+def _check_shared_settings(segments: list[Segment]) -> None:
+    """A segment list built under different analyzers or BM25
+    parameters cannot be scored as one corpus; refuse it instead of
+    silently applying the first segment's settings to all."""
+    from .. import fsio
+
+    def norm(field, v):
+        return tuple(sorted(v or ())) if field == "stopwords" else v
+
+    ref = segments[0]
+    bad = [
+        f"{fsio.basename(s.path)} {f}={s.stats.get(f)!r}"
+        for s in segments[1:]
+        for f in _SHARED_SETTINGS
+        if norm(f, s.stats.get(f)) != norm(f, ref.stats.get(f))
     ]
-    dmap = (
-        spark.read.parquet(os.path.join(index_dir, "docs"))
-        .filter(F.col("ord").isin([int(o) for o in top_ords]))
-        .select("ord", *ident_cols)
-        .toPandas()
-        .set_index("ord")
-    )
-    out = pd.DataFrame(
-        {
-            "query_id": query_id,
-            "rank": np.arange(1, len(top_ords) + 1),
-            "doc_id": dmap["doc_id"].reindex(top_ords).to_numpy(),
-            "score": top_scores,
-        }
-    )
-    if with_docs:
-        for c in ("repo", "path", "commit"):
-            out[c] = dmap[c].reindex(top_ords).to_numpy()
-    return out
+    if bad:
+        raise ValueError(
+            "segments built with different settings cannot be queried "
+            f"together: {', '.join(bad)} (vs {fsio.basename(ref.path)}: "
+            + ", ".join(f"{f}={ref.stats.get(f)!r}" for f in _SHARED_SETTINGS)
+            + ")"
+        )
+
+
+_IDENTITY = ["repo", "path", "commit"]
 
 
 class QuerySession:
-    """Keep-alive query executor (reference PitWorker keeps a PIT open
-    across search_after pages the same way): the terms dictionary,
-    posting blocks and doc-ordinal map persist in executor memory
-    across topk() calls, so a warm single query skips parquet
-    listing/footer reads and scans cached columnar blocks. Use for
-    interactive / repeated querying; one-shot batch jobs can keep
-    calling the module-level topk()."""
+    """The BM25 top-k reader over a pinned segment list (reference
+    PitWorker keeps a PIT open across search_after pages the same
+    way). `index` is an index directory (a one-segment list) or a list
+    of Segments (a delta tree, a PIT view). Opening runs no Spark job;
+    warm() caches the tables in executor memory and loads the driver
+    dictionary and ord map for repeated querying. An unwarmed session
+    reads parquet on every call: the one-shot module functions (topk,
+    topk_one_cold, topk_deltas, pit.topk_pit) are calls onto one.
+    Every query path sees the pinned tombstones; refresh() re-pins."""
 
     # above these sizes the driver-side structures are skipped (a 10^8
     # -term dictionary / 10^12-row doc map do not belong on one node;
-    # lookups fall back to filtered jobs over the cached tables)
+    # lookups fall back to filtered scans of the cached tables)
     DRIVER_DICT_MAX_TERMS = 2_000_000
     DRIVER_DOCS_MAX = 5_000_000
+    # Σdf above which a single query is scored by the batch plan
+    # instead of collecting its encoded blocks to the driver
+    MAX_DRIVER_POSTINGS = 5_000_000
     # serving-path cache partition count: single-query jobs are task-
     # launch bound, so the postings cache holds few fat partitions
     # (measured: 64 cached partitions -> 0.6 s/decode job, 8 -> 0.22 s
     # at SF=0.1/local[32]). Batch jobs that need scan parallelism
-    # should use the module-level topk over the parquet instead.
+    # should use an unwarmed session (the module-level topk).
     CACHE_PARTITIONS = 8
 
-    def __init__(
-        self, spark: SparkSession, index_dir: str,
-        driver_dict: bool | None = None,
-    ):
+    def __init__(self, spark: SparkSession, index: "str | list[Segment]"):
         self.spark = spark
-        self.index_dir = index_dir
-        self.stats = load_stats(index_dir)
-        self.terms = spark.read.parquet(
-            os.path.join(index_dir, "terms")
-        ).persist()
-        self.post = (
-            spark.read.parquet(os.path.join(index_dir, "postings"))
-            .coalesce(self.CACHE_PARTITIONS)
-            .persist()
+        self.segments = (
+            [Segment.open(index)] if isinstance(index, str) else list(index)
         )
-        self.docs = (
-            spark.read.parquet(os.path.join(index_dir, "docs"))
-            .select("ord", "doc_id")
-            .coalesce(self.CACHE_PARTITIONS)
-            .persist()
-        )
-        n_terms = self.terms.count()
-        if driver_dict is None:
-            driver_dict = n_terms <= self.DRIVER_DICT_MAX_TERMS
+        if not self.segments:
+            raise ValueError("a QuerySession needs at least one segment")
+        _check_shared_settings(self.segments)
+        st = [s.stats for s in self.segments]
+        n_docs = sum(s["n_docs"] for s in st)
+        # global N and avgdl over the segment list (a one-segment list
+        # keeps its own stats unchanged)
+        self.stats = st[0] if len(st) == 1 else {
+            **st[0],
+            "n_docs": n_docs,
+            "avgdl": (
+                sum(s["avgdl"] * s["n_docs"] for s in st) / n_docs
+                if n_docs else 0.0
+            ),
+        }
+        self._cache: list[dict] | None = None  # per segment, set by warm()
         self._dict: dict | None = None
         self._ord_map = None
-        if driver_dict:
-            pdf = self.terms.select(
-                "term", "term_id", "df", "bucket", "max_impact"
-            ).toPandas()
-            self._dict = {
-                t: (int(i), float(d), int(bk), float(mi))
-                for t, i, d, bk, mi in zip(
-                    pdf["term"], pdf["term_id"], pdf["df"],
-                    pdf["bucket"], pdf["max_impact"],
-                )
-            }
-        if self.stats["n_docs"] <= self.DRIVER_DOCS_MAX:
-            dpdf = self.docs.toPandas()
-            self._ord_map = np.zeros(int(self.stats["n_docs"]), np.int64)
-            self._ord_map[dpdf["ord"].to_numpy()] = dpdf["doc_id"].to_numpy()
-        # doc identity columns for the serving path (repo/path/commit by
-        # doc_id) — loaded lazily on the first with_docs=True call
-        self._identity = None
-        # delete_by_query visibility: the session snapshots the
-        # tombstone set at open (the PIT contract — reference
-        # PitWorker's point-in-time reader); refresh() re-reads it
-        self._tombstones = _tombstone_ords_np(spark, index_dir)
+        self._tombs_np = None  # segment 0's pinned ords, read on first use
 
     def refresh(self, full: bool = False) -> "QuerySession":
-        """Make post-open index changes visible to this warm session
-        (the PIT-refresh analog). Default: re-reads the tombstone set
-        only — delete_by_query'd docs disappear from topk_one without
-        dropping the warm caches. full=True additionally re-reads and
-        re-caches terms/postings/docs (needed after expunge_deletes
-        or reindex rewrote the artifacts)."""
+        """Re-pin every segment's tombstone part files, so deletes made
+        after open become visible to every query path (the PIT-refresh
+        analog); the warm caches stay. full=True also re-reads
+        stats.json and rebuilds the warm caches (needed after
+        expunge_deletes or reindex rewrote the artifacts)."""
+        segments = [Segment.open(s.path) for s in self.segments]
         if full:
+            warm = self._cache is not None
             self.close()
-            self.__init__(
-                self.spark, self.index_dir,
-                driver_dict=self._dict is not None,
-            )
+            self.__init__(self.spark, segments)
+            if warm:
+                self.warm()
         else:
-            self._tombstones = _tombstone_ords_np(self.spark, self.index_dir)
+            self.segments, self._tombs_np = segments, None
         return self
 
-    def _join_identity(self, res: DataFrame) -> DataFrame:
-        """Attach (repo, path, commit) by broadcasting the tiny top-k
-        result into the docs scan — works unchanged at 10^12 docs."""
-        ident = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docs")
-        ).select("doc_id", "repo", "path", "commit")
-        return ident.join(F.broadcast(res), "doc_id").select(
-            "query_id", "rank", "doc_id", "score", "repo", "path", "commit"
-        )
+    def _table(self, name: str, i: int = 0) -> DataFrame:
+        """Segment i's terms / postings / docs: warm cache or parquet."""
+        if self._cache is not None:
+            return self._cache[i][name]
+        return self.spark.read.parquet(os.path.join(self.segments[i].path, name))
 
-    def _identity_map(self):
-        if self._identity is None:
-            pdf = (
-                self.spark.read.parquet(
-                    os.path.join(self.index_dir, "docs")
-                )
-                .select("doc_id", "repo", "path", "commit")
-                .toPandas()
-                .set_index("doc_id")
-            )
-            self._identity = pdf
-        return self._identity
+    def _tombstones(self, i: int = 0) -> DataFrame | None:
+        seg = self.segments[i]
+        if not seg.tombstones:
+            return None
+        return self.spark.read.parquet(*seg.tombstones).select("ord").distinct()
 
     def warm(self) -> "QuerySession":
-        """Materialize the caches + Python workers (first call pays
-        the cold cost so later queries don't)."""
-        self.post.count()
-        self.docs.count()
+        """Cache the tables, load the driver structures under their size
+        gates, and run one batch and one single query so later queries
+        skip the first-call costs."""
+        if self._cache is None:
+            self._cache, n_terms = [], []
+            for seg in self.segments:
+                terms, post, docs = (
+                    self.spark.read.parquet(os.path.join(seg.path, n))
+                    for n in ("terms", "postings", "docs")
+                )
+                c = {
+                    "terms": terms.persist(),
+                    "postings": post.coalesce(self.CACHE_PARTITIONS).persist(),
+                    "docs": docs.select("ord", "doc_id")
+                    .coalesce(self.CACHE_PARTITIONS).persist(),
+                }
+                n_terms.append(c["terms"].count())
+                c["postings"].count()
+                c["docs"].count()
+                self._cache.append(c)
+            # the driver structures serve topk_one, which reads one segment
+            c, n_docs = self._cache[0], int(self.stats["n_docs"])
+            if len(self.segments) == 1 and n_terms[0] <= self.DRIVER_DICT_MAX_TERMS:
+                pdf = c["terms"].select("term", "term_id", "df", "bucket").toPandas()
+                self._dict = {
+                    t: (int(i), float(d), int(bk))
+                    for t, i, d, bk in zip(
+                        pdf["term"], pdf["term_id"], pdf["df"], pdf["bucket"]
+                    )
+                }
+            if len(self.segments) == 1 and n_docs <= self.DRIVER_DOCS_MAX:
+                dpdf = c["docs"].toPandas()
+                self._ord_map = np.zeros(n_docs, np.int64)
+                self._ord_map[dpdf["ord"].to_numpy()] = dpdf["doc_id"].to_numpy()
         q = self.spark.createDataFrame(
             [(0, "warmup")], "query_id long, query string"
         )
         self.topk(q, k=1).collect()
-        self.topk_one("warmup data", k=1)
+        if len(self.segments) == 1:
+            self.topk_one("warmup data", k=1)
         return self
 
     def topk_one(
         self, query: str, k: int = 10, query_id: int = 0,
         with_docs: bool = False,
-    ):
-        """Single-query serving path: tokenization + dictionary lookup
-        + idf run driver-side (micro work), leaving ONE Spark job that
-        filters the cached postings by term_id literals, decodes,
-        scores and ranks. Returns a pandas DataFrame
-        (query_id, rank, doc_id, score [, repo, path, commit with
-        with_docs=True]). Falls back to the general plan when no
-        driver dictionary is loaded."""
+    ) -> pd.DataFrame:
+        """Single-query serve over a one-segment session: analysis,
+        dictionary lookup and idf run on the driver, ONE job collects
+        the query's ENCODED posting blocks (varbyte, ≈3.3 B/posting),
+        and decode + BM25 + rank run in driver numpy. Each input comes
+        from the warm cache, else from a pushdown-pruned parquet read:
+          1. dictionary: the driver dict, or a `term IN (...)` scan;
+          2. posting blocks: filtered by bucket + term_id;
+          3. ord -> doc_id: the driver ord map, or a docs scan filtered
+             to the k winning ords (always, with with_docs=True).
+        Past MAX_DRIVER_POSTINGS of Σdf the batch plan ranks instead.
+        Returns pandas (query_id, rank, doc_id, score [, repo, path,
+        commit with with_docs=True]); rank-identical to topk."""
         import math
 
-        import pandas as pd
-
-        if self._dict is None:
+        if len(self.segments) > 1:
+            raise NotImplementedError(
+                "topk_one serves a one-segment session; use topk"
+            )
+        cols = ["query_id", "rank", "doc_id", "score"]
+        empty = pd.DataFrame(columns=cols + (_IDENTITY if with_docs else []))
+        toks = sorted(set(analyze_query_py(self.stats, query)))
+        if not toks:
+            return empty
+        if self._dict is not None:
+            entries = [self._dict[t] for t in toks if t in self._dict]
+        else:
+            tpdf = (
+                self._table("terms").filter(F.col("term").isin(toks))
+                .select("term_id", "df", "bucket").toPandas()
+            )
+            entries = [
+                (int(i), float(d), int(bk))
+                for i, d, bk in zip(tpdf["term_id"], tpdf["df"], tpdf["bucket"])
+            ]
+        if not entries:
+            return empty
+        if sum(df for _, df, _ in entries) > self.MAX_DRIVER_POSTINGS:
             q = self.spark.createDataFrame(
                 [(query_id, query)], "query_id long, query string"
             )
-            res = self.topk(q, k=k)
-            if with_docs:
-                res = self._join_identity(res)
-            return (
-                res.toPandas().sort_values("rank").reset_index(drop=True)
-            )
-        toks = sorted(set(analyze_query_py(self.stats, query)))
-        entries = [
-            (t, *self._dict[t]) for t in toks if t in self._dict
-        ]
-        if not entries:
-            return pd.DataFrame(
-                columns=["query_id", "rank", "doc_id", "score"]
-            )
-        n = float(self.stats["n_docs"])
-        idf = {
-            tid: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for _, tid, df, _, _ in entries
-        }
-        tids = list(idf)
-        buckets = sorted({bk for _, _, _, bk, _ in entries})
-        if self._ord_map is not None:
-            # DRIVER-DECODE serve: ONE map-only JVM job collects the
-            # query's matching ENCODED blocks (varbyte, ≈3.3 B/posting
-            # — strictly smaller than the decoded per-doc partial rows
-            # this path used to collect), then varbyte decode + BM25 +
-            # merge/rank all run in driver numpy. Rows touched = the
-            # query's hit set, same as any single-node engine; size-
-            # gated by DRIVER_DOCS_MAX exactly like before. Removing
-            # the Python-worker decode stage from the latency path
-            # cut the serve job p50 342 ms -> ~175 ms at SF=0.1
-            # local[32] (see BASELINE.md round-3 serving table).
+            r = self._rank_ords(q, k).toPandas().sort_values("rank")
+            ords = r["doc_id"].to_numpy(np.int64)
+            scores = r["score"].to_numpy(np.float64)
+        else:
+            n = float(self.stats["n_docs"])
+            idf = {
+                tid: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+                for tid, df, _ in entries
+            }
             blocks = (
-                self.post.filter(F.col("bucket").isin(buckets))
-                .filter(F.col("term_id").isin(tids))
+                self._table("postings")
+                .filter(F.col("bucket").isin(sorted({bk for *_, bk in entries})))
+                .filter(F.col("term_id").isin(list(idf)))
                 .select("term_id", "docs", "tfs", "dls")
                 .toPandas()
             )
             if blocks.empty:
-                return pd.DataFrame(
-                    columns=["query_id", "rank", "doc_id", "score"]
+                return empty
+            ords, scores = _decode_rank_driver(
+                blocks, idf, self.stats, k, exclude=self._excluded_ords()
+            )
+        if not len(ords):
+            return empty
+        if self._ord_map is not None and not with_docs:
+            ident = pd.DataFrame({"doc_id": self._ord_map[ords]})
+        else:
+            # the one identity step: a docs scan filtered to the k winners
+            ident = (
+                self.spark.read.parquet(
+                    os.path.join(self.segments[0].path, "docs")
                 )
-            top_ords, top_scores = _decode_rank_driver(
-                blocks, idf, self.stats, k, exclude=self._tombstones
+                .filter(F.col("ord").isin([int(o) for o in ords]))
+                .select("ord", "doc_id", *(_IDENTITY if with_docs else []))
+                .toPandas()
+                .set_index("ord")
+                .reindex(ords)
+                .reset_index(drop=True)
             )
-            out = pd.DataFrame(
-                {
-                    "query_id": query_id,
-                    "rank": np.arange(1, len(top_ords) + 1),
-                    "doc_id": self._ord_map[top_ords],
-                    "score": top_scores,
-                }
-            )
-            if with_docs:
-                ident = self._identity_map()
-                out = out.join(ident, on="doc_id")
-            return out
-        idf_map = F.create_map(
-            *[F.lit(x) for tid, v in idf.items() for x in (tid, v)]
+        out = ident.assign(
+            query_id=query_id, rank=np.arange(1, len(ords) + 1), score=scores
         )
-        decoder = _make_decoder(
-            self.stats["k1"], self.stats["b"], self.stats["avgdl"],
-            with_query=False,
-        )
-        scored = (
-            self.post.filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term_id").isin(tids))
-            .select(
-                F.element_at(idf_map, F.col("term_id")).alias("idf"),
-                "docs", "tfs", "dls",
+        return out[empty.columns]
+
+    def _excluded_ords(self):
+        """Segment 0's pinned tombstoned ords as a sorted np.int64
+        array for the driver decode's exclude set."""
+        if self._tombs_np is None:
+            ts = self._tombstones()
+            self._tombs_np = (
+                np.empty(0, np.int64) if ts is None
+                else np.sort(ts.toPandas()["ord"].to_numpy(np.int64))
             )
-            .mapInPandas(decoder, schema="doc_id long, partial double")
-        )
-        scored = scored.select(
-            F.lit(query_id).alias("query_id"), "doc_id", "partial"
-        )
-        ranked = _ranked(scored, k)
-        # serving-path execution settings, scoped per call: AQE's
-        # per-exchange materialization turns one logical query into 3-4
-        # driver round-trips, and 64 reduce partitions are pure task
-        # overhead at top-k cardinality. The batch path keeps both.
-        conf = self.spark.conf
-        saved = {
-            "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-            "spark.sql.shuffle.partitions": conf.get("spark.sql.shuffle.partitions"),
-        }
-        try:
-            conf.set("spark.sql.adaptive.enabled", "false")
-            conf.set("spark.sql.shuffle.partitions", "4")
-            res = _resolve_ords(
-                self.spark, self.index_dir, ranked, self.docs
-            )
-            if with_docs:
-                # same (query_id, rank, doc_id, score, repo, path,
-                # commit) shape as the driver-map path — the top-k
-                # result is tiny, so it broadcasts into the docs scan
-                # regardless of docs-table size (the whole reason this
-                # distributed fallback exists)
-                res = self._join_identity(res)
-            return (
-                res.toPandas().sort_values("rank").reset_index(drop=True)
-            )
-        finally:
-            for key, v in saved.items():
-                conf.set(key, v)
+        return self._tombs_np
 
     def topk(
         self,
@@ -3216,23 +3136,246 @@ class QuerySession:
         k: int = 10,
         mode: str = "exhaustive",
         probe_blocks: int = 2,
+        granules: int = 1024,
     ) -> DataFrame:
-        return topk(
-            self.spark,
-            self.index_dir,
-            queries,
-            k=k,
-            mode=mode,
-            probe_blocks=probe_blocks,
-            _stats=self.stats,
-            _terms_df=self.terms,
-            _post_df=self.post,
-            _docs_df=self.docs,
+        """Top-k BM25 per query: (query_id, rank, doc_id, score).
+
+        One segment: the exhaustive or blockmax plan (_rank_ords), then
+        ord -> doc_id through a broadcast of the ranked rows into the
+        docs table. mode="auto" picks blockmax only when the index is
+        big enough AND its build-time blockmax_dispersion statistic
+        says pruning can pay (see AUTO_BLOCKMAX_MIN_DOCS /
+        AUTO_BLOCKMAX_MIN_DISPERSION); otherwise exhaustive decode wins
+        and is selected.
+
+        More segments: _rank_segments, which ignores `mode`."""
+        if len(self.segments) > 1:
+            return self._rank_segments(queries, k)
+        ranked = self._rank_ords(queries, k, mode, probe_blocks, granules)
+        return _resolve_ords(
+            self.spark, self.segments[0].path, ranked, self._table("docs")
+        )
+
+    def _rank_ords(
+        self,
+        queries: DataFrame,
+        k: int,
+        mode: str = "exhaustive",
+        probe_blocks: int = 2,
+        granules: int = 1024,
+    ) -> DataFrame:
+        """One segment's top-k as (query_id, rank, doc_id=ord, score)."""
+        _sweep_deferred()
+        seg, stats = self.segments[0], self.stats
+        n_docs, avgdl = stats["n_docs"], stats["avgdl"]
+        k1, b = stats["k1"], stats["b"]
+        tombs = self._tombstones()
+        if tombs is not None:
+            # Lucene delete semantics: tombstoned docs drop out of
+            # results while postings/stats stay pre-delete. Blockmax
+            # must not run here: a tombstoned top scorer would set θ too
+            # high and prune live docs that belong in the top-k.
+            # Exhaustive decode + anti-join is always correct;
+            # expunge_deletes() restores the pruned path.
+            mode = "exhaustive"
+        if mode == "auto":
+            disp = stats.get("blockmax_dispersion", 0.0) or 0.0
+            mode = (
+                "blockmax"
+                if (
+                    n_docs >= AUTO_BLOCKMAX_MIN_DOCS
+                    and disp >= AUTO_BLOCKMAX_MIN_DISPERSION
+                )
+                else "exhaustive"
+            )
+        qt = query_terms(
+            self.spark, seg.path, queries, n_docs,
+            terms_df=self._table("terms"), stats=stats,
+        )
+        post = _pruned_postings(
+            self.spark, seg.path, qt, post_df=self._table("postings")
+        )
+        decoder = _make_decoder(k1, b, avgdl)
+
+        if mode == "exhaustive":
+            joined = post.join(
+                F.broadcast(qt.select("query_id", "term_id", "idf")), "term_id"
+            )
+            scored = joined.select(
+                "query_id", "idf", "docs", "tfs", "dls"
+            ).mapInPandas(decoder, schema="query_id long, doc_id long, partial double")
+            if tombs is not None:
+                # no broadcast hint: tombstone sets are unbounded (a
+                # delete-by-query can match most of the corpus); AQE
+                # promotes small ones to broadcast on its own
+                scored = scored.join(
+                    tombs.withColumnRenamed("ord", "doc_id"), "doc_id", "left_anti"
+                )
+            return _ranked(scored, k)
+
+        if mode != "blockmax":
+            raise ValueError(f"unknown mode {mode!r}")
+
+        # One fat postings scan, then skinny everywhere else: the query-
+        # term join materializes ONCE into a cache; the brank window and
+        # the θ-bound filter run over a metadata PROJECTION of that cache
+        # (never shuffling the varbyte payloads), and each selected block's
+        # payload comes back from the cache via a broadcast join on its
+        # (query_id, term_id, min_doc) key. Probed blocks decode ONCE —
+        # their partials persist and union into the final scoring instead
+        # of being re-decoded in phase B (the r02 version shuffled fat
+        # rows through the window AND decoded probed blocks twice; that
+        # made blockmax slower than exhaustive at small corpora).
+        #
+        # The upper bound is RANGE-ALIGNED (the real BMW mechanism, not
+        # the loose Σ global-max-of-other-terms bound): the ord space is
+        # cut into `granules` fixed ranges; per (query, granule g),
+        # UB(g) = Σ_t idf_t · max(block_max of t's blocks overlapping g)
+        # — a doc in g provably scores ≤ UB(g(doc)), so a block prunes
+        # when EVERY granule it spans has UB < θ. A term absent from a
+        # granule contributes 0 there, which is what lets a common term's
+        # background blocks die when the query's rare/high-impact term has
+        # no postings nearby (the global-max bound credits every block
+        # with every other term's best impact and prunes almost nothing).
+        qtb = F.broadcast(qt.select("query_id", "term_id", "idf"))
+        joined = post.join(qtb, "term_id")
+        joined.persist()
+        _deferred_unpersist.append(joined)
+        W = max((n_docs + granules - 1) // granules, 1)
+        meta = joined.select(
+            "query_id", "term_id", "min_doc", "max_doc", "block_max", "idf"
+        )
+        wprobe = Window.partitionBy("query_id", "term_id").orderBy(
+            F.desc("block_max"), F.asc("min_doc")
+        )
+        meta = meta.withColumn("brank", F.row_number().over(wprobe))
+        # phase A: decode the highest-block_max blocks per (query, term)
+        probe_keys = meta.filter(F.col("brank") <= probe_blocks).select(
+            "query_id", "term_id", "min_doc"
+        )
+        probed = (
+            joined.join(
+                F.broadcast(probe_keys), ["query_id", "term_id", "min_doc"]
+            )
+            .select("query_id", "idf", "docs", "tfs", "dls")
+            .mapInPandas(decoder, schema="query_id long, doc_id long, partial double")
+        )
+        probed.persist()
+        _deferred_unpersist.append(probed)
+        theta = (
+            _ranked(probed, k)
+            .groupBy("query_id")
+            .agg(F.count("*").alias("cnt"), F.min("score").alias("kth"))
+            .withColumn(
+                "theta",
+                F.when(F.col("cnt") >= k, F.col("kth")).otherwise(F.lit(0.0)),
+            )
+            .select("query_id", "theta")
+        )
+        # granule-aligned upper bounds; a block's granule span totals
+        # O(granules + nblocks) rows per (query, term) because a term's
+        # blocks tile disjoint ord ranges — metadata-scale throughout
+        spans = meta.withColumn(
+            "g",
+            F.explode(
+                F.expr(f"sequence(min_doc DIV {W}, max_doc DIV {W})")
+            ),
+        )
+        gmax = spans.groupBy("query_id", "g", "term_id").agg(
+            F.max(F.col("idf") * F.col("block_max")).alias("gm")
+        )
+        ub = gmax.groupBy("query_id", "g").agg(F.sum("gm").alias("ub"))
+        # phase B: decode the not-yet-probed blocks where SOME granule can
+        # reach θ (a fully-pruned block provably holds no top-k doc;
+        # probed blocks that fail the bound are already in `probed`, and
+        # their partials only ever score docs that stay below θ)
+        surv_keys = (
+            spans.filter(F.col("brank") > probe_blocks)
+            .join(F.broadcast(ub), ["query_id", "g"])
+            .join(F.broadcast(theta), "query_id", "left")
+            .filter(F.col("theta").isNull() | (F.col("ub") >= F.col("theta")))
+            .select("query_id", "term_id", "min_doc")
+            .distinct()
+        )
+        rest = (
+            joined.join(
+                F.broadcast(surv_keys), ["query_id", "term_id", "min_doc"]
+            )
+            .select("query_id", "idf", "docs", "tfs", "dls")
+            .mapInPandas(decoder, schema="query_id long, doc_id long, partial double")
+        )
+        scored = probed.unionByName(rest)
+        # the returned (lazy) DataFrame still references the cached joined
+        # / probed frames, so they are not unpersisted here; the NEXT
+        # batch call (or session stop) reclaims them via _sweep_deferred
+
+        return _ranked(scored, k)
+
+    def _rank_segments(self, queries: DataFrame, k: int) -> DataFrame:
+        """Top-k over a segment list (the delta-tree plan),
+        rank-identical to querying the compacted index (asserted in
+        tests): df sums across the segment dictionaries, N/avgdl are
+        the session's global stats, and each segment decodes with them,
+        drops its pinned tombstones and resolves its own ordinals.
+        Partials then sum by doc_id (a
+        doc re-ingested into two segments gets both — the union
+        compaction resolves) and rank on (score desc, doc_id asc). One
+        read per segment: the fan-in compact_deltas exists to reclaim."""
+        from functools import reduce
+
+        stats, n = self.stats, range(len(self.segments))
+        # term_id is the same deterministic hash in every segment
+        terms_global = reduce(DataFrame.unionByName, [
+            self._table("terms", i).select("term", "term_id", "df") for i in n
+        ]).groupBy("term", "term_id").agg(F.sum("df").alias("df"))
+        # every segment shares the analyzer (checked at open)
+        analyze = _query_analyzer(stats)
+        qt = (
+            queries.select(
+                "query_id",
+                F.explode(F.array_distinct(analyze(F.col("query")))).alias(
+                    "term"
+                ),
+            )
+            .join(terms_global, "term")
+            .withColumn("idf", _idf_col(stats["n_docs"]))
+            .select("query_id", "term_id", "idf")
+        )
+        qtb = F.broadcast(qt)
+        decoder = _make_decoder(stats["k1"], stats["b"], stats["avgdl"])
+
+        parts = []
+        for i in n:
+            part = (
+                self._table("postings", i).join(qtb, "term_id")
+                .select("query_id", "idf", "docs", "tfs", "dls")
+                .mapInPandas(
+                    decoder,
+                    schema="query_id long, doc_id long, partial double",
+                )
+                .withColumnRenamed("doc_id", "ord")
+            )
+            tombs = self._tombstones(i)
+            if tombs is not None:
+                part = part.join(tombs, "ord", "left_anti")
+            parts.append(part.join(
+                self._table("docs", i).select("ord", "doc_id"), "ord"
+            ).select("query_id", "doc_id", "partial"))
+        res = reduce(DataFrame.unionByName, parts).groupBy(
+            "query_id", "doc_id"
+        ).agg(F.sum("partial").alias("score"))
+        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+        return (
+            res.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "doc_id", "score")
         )
 
     def close(self) -> None:
-        for df in (self.terms, self.post, self.docs):
-            df.unpersist()
+        for c in self._cache or ():
+            for df in c.values():
+                df.unpersist()
+        self._cache = None
 
 
 def topk(
@@ -3243,156 +3386,29 @@ def topk(
     mode: str = "exhaustive",
     probe_blocks: int = 2,
     granules: int = 1024,
-    _stats: dict | None = None,
-    _terms_df: DataFrame | None = None,
-    _post_df: DataFrame | None = None,
-    _docs_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-k BM25 per query: (query_id, rank, doc_id, score).
+    """Top-k BM25 per query: (query_id, rank, doc_id, score), from an
+    unwarmed one-segment QuerySession (see QuerySession.topk)."""
+    return QuerySession(spark, index_dir).topk(
+        queries, k=k, mode=mode, probe_blocks=probe_blocks, granules=granules
+    )
 
-    mode="auto" picks blockmax only when the index is big enough AND
-    its build-time blockmax_dispersion statistic says pruning can pay
-    (see AUTO_BLOCKMAX_MIN_DOCS / AUTO_BLOCKMAX_MIN_DISPERSION);
-    otherwise exhaustive decode wins and is selected."""
-    _sweep_deferred()
-    stats = _stats if _stats is not None else load_stats(index_dir)
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
-    tombs = _tombstone_ords(spark, index_dir)
-    if tombs is not None:
-        # Lucene delete semantics: tombstoned docs drop out of results
-        # while postings/stats stay pre-delete. Blockmax must not run
-        # here: a tombstoned top scorer would set θ too high and prune
-        # live docs that belong in the top-k. Exhaustive decode +
-        # anti-join is always correct; expunge_deletes() restores the
-        # pruned path.
-        mode = "exhaustive"
-    if mode == "auto":
-        disp = stats.get("blockmax_dispersion", 0.0) or 0.0
-        mode = (
-            "blockmax"
-            if (
-                n_docs >= AUTO_BLOCKMAX_MIN_DOCS
-                and disp >= AUTO_BLOCKMAX_MIN_DISPERSION
-            )
-            else "exhaustive"
-        )
-    qt = query_terms(spark, index_dir, queries, n_docs, terms_df=_terms_df)
-    post = _pruned_postings(spark, index_dir, qt, post_df=_post_df)
-    decoder = _make_decoder(k1, b, avgdl)
 
-    if mode == "exhaustive":
-        joined = post.join(
-            F.broadcast(qt.select("query_id", "term_id", "idf")), "term_id"
-        )
-        scored = joined.select(
-            "query_id", "idf", "docs", "tfs", "dls"
-        ).mapInPandas(decoder, schema="query_id long, doc_id long, partial double")
-        if tombs is not None:
-            # no broadcast hint: tombstone sets are unbounded (a
-            # delete-by-query can match most of the corpus); AQE
-            # promotes small ones to broadcast on its own
-            scored = scored.join(
-                tombs.withColumnRenamed("ord", "doc_id"), "doc_id", "left_anti"
-            )
-        return _resolve_ords(spark, index_dir, _ranked(scored, k), _docs_df)
-
-    if mode != "blockmax":
-        raise ValueError(f"unknown mode {mode!r}")
-
-    # One fat postings scan, then skinny everywhere else: the query-
-    # term join materializes ONCE into a cache; the brank window and
-    # the θ-bound filter run over a metadata PROJECTION of that cache
-    # (never shuffling the varbyte payloads), and each selected block's
-    # payload comes back from the cache via a broadcast join on its
-    # (query_id, term_id, min_doc) key. Probed blocks decode ONCE —
-    # their partials persist and union into the final scoring instead
-    # of being re-decoded in phase B (the r02 version shuffled fat
-    # rows through the window AND decoded probed blocks twice; that
-    # made blockmax slower than exhaustive at small corpora).
-    #
-    # The upper bound is RANGE-ALIGNED (the real BMW mechanism, not
-    # the loose Σ global-max-of-other-terms bound): the ord space is
-    # cut into `granules` fixed ranges; per (query, granule g),
-    # UB(g) = Σ_t idf_t · max(block_max of t's blocks overlapping g)
-    # — a doc in g provably scores ≤ UB(g(doc)), so a block prunes
-    # when EVERY granule it spans has UB < θ. A term absent from a
-    # granule contributes 0 there, which is what lets a common term's
-    # background blocks die when the query's rare/high-impact term has
-    # no postings nearby (the global-max bound credits every block
-    # with every other term's best impact and prunes almost nothing).
-    qtb = F.broadcast(qt.select("query_id", "term_id", "idf"))
-    joined = post.join(qtb, "term_id")
-    joined.persist()
-    _deferred_unpersist.append(joined)
-    W = max((n_docs + granules - 1) // granules, 1)
-    meta = joined.select(
-        "query_id", "term_id", "min_doc", "max_doc", "block_max", "idf"
+def topk_one_cold(
+    spark: SparkSession,
+    index_dir: str,
+    query: str,
+    k: int = 10,
+    query_id: int = 0,
+    with_docs: bool = False,
+) -> pd.DataFrame:
+    """Ad-hoc single-query serve with NOTHING resident: the
+    QuerySession.topk_one body on an unwarmed session, so every byte
+    comes off pushdown-pruned parquet scans (terms `IN`, postings by
+    bucket + term_id, docs by the k winning ords)."""
+    return QuerySession(spark, index_dir).topk_one(
+        query, k=k, query_id=query_id, with_docs=with_docs
     )
-    wprobe = Window.partitionBy("query_id", "term_id").orderBy(
-        F.desc("block_max"), F.asc("min_doc")
-    )
-    meta = meta.withColumn("brank", F.row_number().over(wprobe))
-    # phase A: decode the highest-block_max blocks per (query, term)
-    probe_keys = meta.filter(F.col("brank") <= probe_blocks).select(
-        "query_id", "term_id", "min_doc"
-    )
-    probed = (
-        joined.join(
-            F.broadcast(probe_keys), ["query_id", "term_id", "min_doc"]
-        )
-        .select("query_id", "idf", "docs", "tfs", "dls")
-        .mapInPandas(decoder, schema="query_id long, doc_id long, partial double")
-    )
-    probed.persist()
-    _deferred_unpersist.append(probed)
-    theta = (
-        _ranked(probed, k)
-        .groupBy("query_id")
-        .agg(F.count("*").alias("cnt"), F.min("score").alias("kth"))
-        .withColumn(
-            "theta",
-            F.when(F.col("cnt") >= k, F.col("kth")).otherwise(F.lit(0.0)),
-        )
-        .select("query_id", "theta")
-    )
-    # granule-aligned upper bounds; a block's granule span totals
-    # O(granules + nblocks) rows per (query, term) because a term's
-    # blocks tile disjoint ord ranges — metadata-scale throughout
-    spans = meta.withColumn(
-        "g",
-        F.explode(
-            F.expr(f"sequence(min_doc DIV {W}, max_doc DIV {W})")
-        ),
-    )
-    gmax = spans.groupBy("query_id", "g", "term_id").agg(
-        F.max(F.col("idf") * F.col("block_max")).alias("gm")
-    )
-    ub = gmax.groupBy("query_id", "g").agg(F.sum("gm").alias("ub"))
-    # phase B: decode the not-yet-probed blocks where SOME granule can
-    # reach θ (a fully-pruned block provably holds no top-k doc;
-    # probed blocks that fail the bound are already in `probed`, and
-    # their partials only ever score docs that stay below θ)
-    surv_keys = (
-        spans.filter(F.col("brank") > probe_blocks)
-        .join(F.broadcast(ub), ["query_id", "g"])
-        .join(F.broadcast(theta), "query_id", "left")
-        .filter(F.col("theta").isNull() | (F.col("ub") >= F.col("theta")))
-        .select("query_id", "term_id", "min_doc")
-        .distinct()
-    )
-    rest = (
-        joined.join(
-            F.broadcast(surv_keys), ["query_id", "term_id", "min_doc"]
-        )
-        .select("query_id", "idf", "docs", "tfs", "dls")
-        .mapInPandas(decoder, schema="query_id long, doc_id long, partial double")
-    )
-    scored = probed.unionByName(rest)
-    # the returned (lazy) DataFrame still references the cached joined
-    # / probed frames, so they are not unpersisted here; the NEXT
-    # topk() call (or session stop) reclaims them via _sweep_deferred
-    return _resolve_ords(spark, index_dir, _ranked(scored, k), _docs_df)
 
 
 def topk_deltas(
@@ -3403,131 +3419,24 @@ def topk_deltas(
     deltas: list[str] | None = None,
     tombstone_files: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """Top-k BM25 directly over the streamed delta indexes under
-    index_root (the foreachBatch output of
-    streaming.pipeline.incremental_index) — no compaction required.
-
-    Rank-identical to querying the compacted index (asserted in tests):
-    BM25's corpus statistics are global, so per-term df sums across
-    delta dictionaries, avgdl/N recompute from the delta stats, and
-    every posting's impact uses its stored (tf, dl) with those global
-    stats. Doc identities resolve per delta (ordinals are delta-local),
-    tie-break on the resolved doc_id. Scan cost is a pruned read per
-    delta — the O(#deltas) fan-in this trades away is what
-    compact_deltas exists to reclaim.
-
-    `deltas` / `tombstone_files` pin an explicit view (the PIT path,
-    index/pit.py): an explicit delta list replaces the live listing,
-    and an explicit per-delta tombstone file list replaces the live
-    tombstone set (an empty list means "no deletes visible"), so the
-    frozen view ignores both later ingests and later deletes.
-    """
-    import json as _json
-
-    from .. import fsio
-
-    if deltas is None:
-        deltas = [
-            p
-            for p in fsio.listdir(index_root)
-            if os.path.basename(p.rstrip("/")).startswith("delta=")
-        ]
-    if not deltas:
+    """Top-k BM25 directly over the delta indexes under index_root (the
+    streaming and `_bulk` outputs), no compaction required: the
+    segment-list plan of an unwarmed QuerySession with one segment per
+    delta (QuerySession._rank_segments), for any delta count — on a
+    single delta it runs fewer Spark jobs than the index plan, whose
+    bucket-pruning collect adds two. `deltas` / `tombstone_files` pin
+    an explicit view (the PIT path): a delta missing from
+    `tombstone_files` has no visible deletes."""
+    paths = delta_dirs(index_root) if deltas is None else deltas
+    if not paths:
         raise ValueError(f"no delta=* indexes under {index_root}")
-    stats = [
-        _json.loads(fsio.read_text(os.path.join(d, "stats.json")))
-        for d in deltas
+    segments = [
+        Segment.open(
+            d, None if tombstone_files is None else tombstone_files.get(d, [])
+        )
+        for d in paths
     ]
-    n_docs = sum(s["n_docs"] for s in stats)
-    dl_total = sum(s["avgdl"] * s["n_docs"] for s in stats)
-    avgdl = dl_total / n_docs if n_docs else 0.0
-    k1, b = stats[0]["k1"], stats[0]["b"]
-
-    # global df per term: sum the per-delta dictionaries (term_id is
-    # the same deterministic hash everywhere)
-    terms_parts = [
-        spark.read.parquet(os.path.join(d, "terms")).select(
-            "term", "term_id", "df"
-        )
-        for d in deltas
-    ]
-    terms_all = terms_parts[0]
-    for t in terms_parts[1:]:
-        terms_all = terms_all.unionByName(t)
-    terms_global = terms_all.groupBy("term", "term_id").agg(
-        F.sum("df").alias("df")
-    )
-    # all deltas share one BuildConfig (the streaming writer), so the
-    # first delta's persisted analyzer chain applies to the query text
-    analyze = _query_analyzer(stats[0])
-    qt = (
-        queries.select(
-            "query_id",
-            F.explode(F.array_distinct(analyze(F.col("query")))).alias(
-                "term"
-            ),
-        )
-        .join(terms_global, "term")
-        .withColumn("idf", _idf_col(n_docs))
-        .select("query_id", "term_id", "idf")
-    )
-    qtb = F.broadcast(qt)
-    decoder = _make_decoder(k1, b, avgdl)
-
-    scored_parts = []
-    for di, d in enumerate(deltas):
-        post = spark.read.parquet(os.path.join(d, "postings"))
-        part = (
-            post.join(qtb, "term_id")
-            .select("query_id", "idf", "docs", "tfs", "dls")
-            .mapInPandas(
-                decoder,
-                schema="query_id long, doc_id long, partial double",
-            )
-            # resolve delta-local ordinals to real doc ids BEFORE the
-            # global aggregation (a doc lives in exactly one delta
-            # unless re-ingested, in which case both contribute — the
-            # same union semantics the reference's CDC path has)
-            .withColumnRenamed("doc_id", "ord")
-        )
-        # per-delta tombstones (the _bulk facade's delete path writes
-        # them): anti-join each delta's own set before identity
-        # resolution — same visibility contract as the single-index
-        # paths. A pinned view (PIT) reads ONLY the pinned part
-        # files; deletes appended after open stay invisible to it.
-        if tombstone_files is not None:
-            pinned = tombstone_files.get(d, [])
-            if pinned:
-                tombs = (
-                    spark.read.parquet(*pinned)
-                    .select("ord").distinct()
-                )
-                part = part.join(tombs, "ord", "left_anti")
-        else:
-            part = _anti_tombstones(spark, d, part, col="ord")
-        part = (
-            part
-            .join(
-                spark.read.parquet(os.path.join(d, "docs")).select(
-                    "ord", "doc_id"
-                ),
-                "ord",
-            )
-            .select("query_id", "doc_id", "partial")
-        )
-        scored_parts.append(part)
-    scored = scored_parts[0]
-    for p in scored_parts[1:]:
-        scored = scored.unionByName(p)
-    res = scored.groupBy("query_id", "doc_id").agg(
-        F.sum("partial").alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        res.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return QuerySession(spark, segments)._rank_segments(queries, k)
 
 
 def topk_multi(

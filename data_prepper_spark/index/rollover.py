@@ -33,6 +33,7 @@ import os
 
 from .. import fsio
 from .aliases import _load, _store
+from .build import delta_dirs
 
 
 def _count_docs(index_dir: str) -> int:
@@ -46,9 +47,7 @@ def _count_docs(index_dir: str) -> int:
         return 0
     total = 0
     seen = False
-    for p in fsio.listdir(index_dir):
-        if not fsio.basename(p.rstrip("/")).startswith("delta="):
-            continue
+    for p in delta_dirs(index_dir):
         dsp = os.path.join(p, "stats.json")
         if fsio.exists(dsp):
             seen = True

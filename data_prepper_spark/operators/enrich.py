@@ -118,26 +118,6 @@ def translate_file(
     return translate(df, source, target, doc, default)
 
 
-def translate_table(
-    df: DataFrame,
-    source: str,
-    target: str,
-    lookup: DataFrame,
-    lookup_key: str,
-    lookup_value: str,
-    default: str | None = None,
-) -> DataFrame:
-    """translate with a mappings table (file/S3 in the reference) —
-    broadcast left join."""
-    lk = lookup.select(
-        F.col(lookup_key).alias(source), F.col(lookup_value).alias(target)
-    )
-    out = df.join(broadcast(lk), source, "left")
-    if default is not None:
-        out = out.withColumn(target, F.coalesce(F.col(target), F.lit(default)))
-    return out
-
-
 def translate_regex(
     df: DataFrame,
     source: str,

@@ -188,7 +188,8 @@ def bulk_apply(spark, spool_dir: str, index_root: str, cfg=None) -> dict:
     """
     from pyspark.sql import functions as F
 
-    from ..index.build import BuildConfig, build_index
+    from .. import fsio
+    from ..index.build import BuildConfig, build_index, delta_dirs
     from ..streaming.pipeline import next_delta_seq
 
     bulk_dir = os.path.join(spool_dir, "bulk")
@@ -226,14 +227,7 @@ def bulk_apply(spark, spool_dir: str, index_root: str, cfg=None) -> dict:
     # {"content": ...}); missing prior + doc_as_upsert seeds from the
     # partial. The per-id fan-in is request-bounded, so collects here
     # are <= #update actions.
-    from .. import fsio
-
-    deltas_before = sorted(
-        p for p in (
-            fsio.listdir(index_root) if fsio.isdir(index_root) else []
-        )
-        if os.path.basename(p.rstrip("/")).startswith("delta=")
-    )
+    deltas_before = delta_dirs(index_root)
     upd_rows = ops.filter(F.col("op") == "update").select(
         "index", "id", "doc_json"
     ).collect()
@@ -341,13 +335,7 @@ def bulk_apply(spark, spool_dir: str, index_root: str, cfg=None) -> dict:
     ).distinct()
     n_deleted = 0
     if dels.take(1):
-        from .. import fsio
-
-        deltas = [
-            p for p in fsio.listdir(index_root)
-            if os.path.basename(p.rstrip("/")).startswith("delta=")
-        ]
-        for d in deltas:
+        for d in delta_dirs(index_root):
             ident = spark.read.parquet(os.path.join(d, "docs")).select(
                 "ord", "repo", "path"
             )
@@ -413,22 +401,18 @@ def update_by_query(
     """
     from pyspark.sql import functions as F
 
-    from .. import fsio
-    from ..index.build import BuildConfig, build_index
+    from ..index.build import BuildConfig, build_index, delta_dirs
     from ..index.query import _match_set, load_stats, query_terms
     from ..streaming.pipeline import next_delta_seq
 
-    deltas = [
-        p for p in fsio.listdir(index_root)
-        if os.path.basename(p.rstrip("/")).startswith("delta=")
-    ]
+    deltas = delta_dirs(index_root)
     if not deltas:
         raise ValueError(f"no delta=* indexes under {index_root}")
     seq = next_delta_seq(index_root)
     q = spark.createDataFrame([(0, query)], "query_id long, query string")
     matched_rows = None
     tomb = []
-    for d in sorted(deltas):
+    for d in deltas:
         stats = load_stats(d)
         qt = query_terms(spark, d, q, stats["n_docs"], stats=stats).select(
             "query_id", "term_id", "idf", "bucket"

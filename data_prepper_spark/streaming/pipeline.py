@@ -166,6 +166,7 @@ def maybe_compact(
       is bit-identical to a one-shot batch build regardless of the
       merge tree (tokens-level merge; asserted in tests)."""
     from .. import fsio
+    from ..index.build import delta_dirs
 
     # recover a previous merge that crashed mid-publish BEFORE
     # anything else (ADVICE r03: the old code rmtree'd the leftover
@@ -174,11 +175,7 @@ def maybe_compact(
     # of the merged docs)
     tmp = os.path.join(index_root, "_compacting")
     _recover_compaction(index_root, tmp)
-    deltas = [
-        p
-        for p in fsio.listdir(index_root)
-        if fsio.basename(p).startswith("delta=")
-    ]
+    deltas = delta_dirs(index_root)
     if len(deltas) <= max_deltas:
         return None
     if policy == "full":
@@ -248,18 +245,13 @@ def _delta_names_everywhere(index_root: str) -> list[str]:
     """delta=* basenames both live and PIT-retired — the namespace a
     new delta name must not collide with."""
     from .. import fsio
+    from ..index.build import delta_dirs
 
-    names = [
-        fsio.basename(d.rstrip("/"))
-        for d in fsio.listdir(index_root)
+    return [
+        fsio.basename(d)
+        for root in (index_root, os.path.join(index_root, "retired"))
+        for d in delta_dirs(root)
     ]
-    retired = os.path.join(index_root, "retired")
-    if fsio.exists(retired):
-        names += [
-            fsio.basename(d.rstrip("/"))
-            for d in fsio.listdir(retired)
-        ]
-    return [n for n in names if n.startswith("delta=")]
 
 
 def _next_seq(index_root: str) -> int:
@@ -327,16 +319,13 @@ def compact_deltas(
     from ..index.build import (
         TOKENS_FORMAT_VERSION,
         BuildConfig,
+        delta_dirs,
         run_index_stage,
     )
 
     cfg = cfg or BuildConfig(n_buckets=8, hot_group_target=10_000)
     if deltas is None:
-        deltas = [
-            p
-            for p in fsio.listdir(index_root)
-            if fsio.basename(p).startswith("delta=")
-        ]
+        deltas = delta_dirs(index_root)
     if not deltas:
         raise ValueError(f"no delta=* indexes under {index_root}")
     fsio.makedirs(out_dir)

@@ -2938,6 +2938,30 @@ def test_moving_avg_models(spark, dv_index, dv_corpus):
             search(spark, dv_index, body_bad, corpus_path=dv_corpus)
 
 
+def test_ks_test_bucket_count_mismatch_fails(spark):
+    """bucket_count_ks_test needs one fraction per bucket; a parent
+    with more (or fewer) buckets used to drop the extra buckets from
+    the CDF silently. It now fails, naming the aggregation and both
+    counts."""
+    from data_prepper_spark.index.aggs import sibling_bucket_metric
+
+    buckets = spark.createDataFrame(
+        [(0, k, c) for k, c in enumerate([5, 3, 2])],
+        "query_id long, key long, doc_count long",
+    )
+    conf = {"buckets_path": "hist>_count", "fractions": [0.5, 0.5]}
+    with pytest.raises(
+        ValueError,
+        match=r"bucket_count_ks_test over 'hist>_count': 3 buckets but 2",
+    ):
+        sibling_bucket_metric(buckets, "bucket_count_ks_test", "doc_count", conf)
+    conf["fractions"] = [0.5, 0.3, 0.2]  # one per bucket: accepted
+    got = sibling_bucket_metric(
+        buckets, "bucket_count_ks_test", "doc_count", conf
+    ).collect()
+    assert got[0].d_stat == pytest.approx(0.0)
+
+
 def test_ks_test_and_bucket_correlation(spark, dv_index, dv_corpus):
     """bucket_count_ks_test + bucket_correlation siblings (the
     ml-commons pipeline pair) over a histogram parent — D statistics,

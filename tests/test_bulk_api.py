@@ -150,7 +150,7 @@ def test_bulk_endpoint_and_delta_lifecycle(spark, tmp_path):
         assert stats["n_docs"] == 3  # 4 indexed - 1 deleted
 
 
-def _spool_and_apply(spark, tmp_path, root, tag, lines):
+def _spool_and_apply(spark, tmp_path, root, tag, lines, cfg=None):
     import os
 
     spool = str(tmp_path / f"spool_{tag}" / "bulk")
@@ -158,7 +158,7 @@ def _spool_and_apply(spark, tmp_path, root, tag, lines):
     with open(os.path.join(spool, "0.ndjson"), "w") as f:
         for ln in lines:
             f.write(json.dumps(ln) + "\n")
-    return bulk_apply(spark, str(tmp_path / f"spool_{tag}"), root)
+    return bulk_apply(spark, str(tmp_path / f"spool_{tag}"), root, cfg=cfg)
 
 
 def test_second_bulk_apply_gets_a_fresh_delta(spark, tmp_path):
@@ -187,6 +187,30 @@ def test_second_bulk_apply_gets_a_fresh_delta(spark, tmp_path):
     )
     hits = topk_deltas(spark, root, q, k=5).collect()
     assert {r["query_id"] for r in hits} == {0, 1}  # both docs live
+
+
+def test_mixed_analyzer_deltas_fail_loudly(spark, tmp_path):
+    """bulk_apply takes a BuildConfig per call, so two deltas under one
+    root can carry different analyzers. Scoring them with the first
+    delta's analyzer would silently under-match the other; a delta
+    query must refuse the mix and name the delta and the field."""
+    from data_prepper_spark.index.build import BuildConfig
+    from data_prepper_spark.index.query import topk_deltas
+
+    root = str(tmp_path / "root")
+    _spool_and_apply(spark, tmp_path, root, "a", [
+        {"op": "index", "index": "logs", "id": "1",
+         "content": "alpha columns", "doc_json": None},
+    ])
+    _spool_and_apply(spark, tmp_path, root, "b", [
+        {"op": "index", "index": "logs", "id": "2",
+         "content": "bravo columns", "doc_json": None},
+    ], cfg=BuildConfig(
+        n_buckets=8, hot_group_target=10_000, stemmer="minimal_english",
+    ))
+    q = spark.createDataFrame([(0, "columns")], "query_id long, query string")
+    with pytest.raises(ValueError, match=r"delta=1 stemmer='minimal_english'"):
+        topk_deltas(spark, root, q, k=5).collect()
 
 
 def test_update_by_query(spark, tmp_path):

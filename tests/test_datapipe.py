@@ -690,7 +690,7 @@ def test_ngram_logprob(spark):
         r.doc_id: r.ngram_logprob
         for r in ngram_logprob(
             spark.createDataFrame(cand, "doc_id long, text string"),
-            "text", model, n=3,
+            "text", model, n=3, id_col="doc_id",
         ).collect()
     }
 
@@ -711,16 +711,32 @@ def test_ngram_logprob(spark):
     assert got[2] == pytest.approx(score(cand[1][1]))
     assert got[3] is None
     assert got[1] > got[2]  # typical text scores higher
-    # id_col path (skinny shuffle + join-back) agrees exactly
-    got2 = {
-        r.doc_id: r.ngram_logprob
-        for r in ngram_logprob(
-            spark.createDataFrame(cand, "doc_id long, text string"),
-            "text", model, n=3, id_col="doc_id",
-        ).collect()
-    }
-    assert got2[3] is None
-    assert got2[1] == got[1] and got2[2] == got[2]
+
+
+def test_ngram_logprob_keeps_every_row_once(spark):
+    """Keyed on every column (no id_col), the grouped mean collapsed
+    duplicate docs into one row and emitted a NULL-bearing short doc
+    twice. id_col is required now: each input row comes back once."""
+    from data_prepper_spark.datapipe.textstats import (
+        ngram_logprob,
+        ngram_model,
+    )
+
+    model = ngram_model(
+        spark.createDataFrame([("the quick dog",)], "text string"), "text", n=3
+    )
+    rows = [
+        (1, "the quick dog", "a"),
+        (2, "the quick dog", "a"),  # same content and tag as row 1
+        (3, "ab", None),  # shorter than n, NULL tag
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, tag string")
+    with pytest.raises(TypeError):
+        ngram_logprob(docs.drop("doc_id"), "text", model, n=3)
+    got = ngram_logprob(docs, "text", model, n=3, id_col="doc_id").collect()
+    assert sorted(r.doc_id for r in got) == [1, 2, 3]
+    by_id = {r.doc_id: r.ngram_logprob for r in got}
+    assert by_id[1] == by_id[2] and by_id[3] is None
 
 
 def test_canonical_keep(spark):

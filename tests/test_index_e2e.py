@@ -304,78 +304,106 @@ def test_query_session_with_docs(spark, index_dir, queries_pdf):
         qs.close()
 
 
-def test_query_session_with_docs_distributed_fallback(
-    spark, index_dir, queries_pdf
+def test_query_session_with_docs_without_driver_structures(
+    spark, index_dir, queries_pdf, monkeypatch
 ):
-    """with_docs must survive the no-driver-structures path (VERDICT
-    r02 #4: the fallback silently dropped identity columns). Force the
-    distributed path by clearing both driver-side maps."""
+    """with_docs resolves identity columns on every input path of the
+    single-query body (VERDICT r02 #4: a fallback once dropped them):
+    the warm driver dict + ord map, the cached terms table with no
+    driver dict and no ord map (size gates forced to 0), and an
+    unwarmed session that reads only pushdown-pruned parquet."""
     from data_prepper_spark.index.query import QuerySession
 
-    qs = QuerySession(spark, index_dir, driver_dict=True)
+    row = queries_pdf.iloc[0]
+    qs = QuerySession(spark, index_dir).warm()
     try:
-        row = queries_pdf.iloc[0]
         want = qs.topk_one(row["query"], k=3, with_docs=True)
-        # no driver dict at all -> general topk plan + identity join
-        qs2 = QuerySession(spark, index_dir, driver_dict=False)
-        try:
-            got = qs2.topk_one(row["query"], k=3, with_docs=True)
-            assert list(got.columns) == [
-                "query_id", "rank", "doc_id", "score",
-                "repo", "path", "commit",
-            ]
-            g = got.sort_values("rank").reset_index(drop=True)
-            w = want.sort_values("rank").reset_index(drop=True)
-            assert (g["doc_id"] == w["doc_id"]).all()
-            assert (g["path"] == w["path"]).all()
-        finally:
-            qs2.close()
-        # driver dict present but docs map too big -> the _ord_map-None
-        # branch with the scoped-conf Spark ranking + identity join
-        qs._ord_map = None
-        got2 = qs.topk_one(row["query"], k=3, with_docs=True)
-        g2 = got2.sort_values("rank").reset_index(drop=True)
-        assert (g2["doc_id"].to_numpy() == w["doc_id"].to_numpy()).all()
-        assert (g2["path"].to_numpy() == w["path"].to_numpy()).all()
     finally:
         qs.close()
+    monkeypatch.setattr(QuerySession, "DRIVER_DICT_MAX_TERMS", 0)
+    monkeypatch.setattr(QuerySession, "DRIVER_DOCS_MAX", 0)
+    bare = QuerySession(spark, index_dir).warm()
+    try:
+        assert bare._dict is None and bare._ord_map is None
+        gots = [
+            bare.topk_one(row["query"], k=3, with_docs=True),
+            QuerySession(spark, index_dir).topk_one(
+                row["query"], k=3, with_docs=True
+            ),
+        ]
+    finally:
+        bare.close()
+    for got in gots:
+        assert list(got.columns) == [
+            "query_id", "rank", "doc_id", "score", "repo", "path", "commit",
+        ]
+        assert got["doc_id"].tolist() == want["doc_id"].tolist()
+        assert got["path"].tolist() == want["path"].tolist()
+        assert np.allclose(got["score"], want["score"])
 
 
-def test_topk_one_cold_matches_topk(spark, index_dir, queries_pdf):
+def test_topk_one_cold_matches_topk(
+    spark, index_dir, queries_pdf, monkeypatch
+):
     """topk_one_cold (no resident state; pushdown-pruned scans +
     driver decode) is rank/score-identical to the module topk on both
-    the driver-decode path and the Σdf-gated distributed fallback;
-    with_docs resolves identity columns."""
-    from data_prepper_spark.index.query import topk_one_cold
+    the driver-decode path and the Σdf-gated batch plan; with_docs
+    resolves identity columns."""
+    from data_prepper_spark.index.query import QuerySession, topk_one_cold
 
-    for _, row in queries_pdf.head(4).iterrows():
+    rows = list(queries_pdf.head(4).iterrows())
+    want = {}
+    for _, row in rows:
         q = spark.createDataFrame(
             [(int(row["query_id"]), row["query"])],
             "query_id long, query string",
         )
-        b = (
+        want[row["query_id"]] = (
             topk(spark, index_dir, q, k=10)
             .toPandas()
             .sort_values("rank")
             .reset_index(drop=True)
         )
-        for gate in (5_000_000, 1):  # driver decode, then fallback
+    for gate in (5_000_000, 1):  # driver decode, then the batch plan
+        monkeypatch.setattr(QuerySession, "MAX_DRIVER_POSTINGS", gate)
+        for _, row in rows:
             a = topk_one_cold(
                 spark, index_dir, row["query"], k=10,
-                query_id=int(row["query_id"]), max_driver_postings=gate,
+                query_id=int(row["query_id"]),
             )
+            b = want[row["query_id"]]
             assert a["doc_id"].tolist() == b["doc_id"].tolist()
             assert np.allclose(a["score"], b["score"])
-    row = queries_pdf.iloc[0]
-    for gate in (5_000_000, 1):
         wd = topk_one_cold(
-            spark, index_dir, row["query"], k=3, with_docs=True,
-            max_driver_postings=gate,
+            spark, index_dir, rows[0][1]["query"], k=3, with_docs=True,
         )
         assert list(wd.columns) == [
             "query_id", "rank", "doc_id", "score", "repo", "path", "commit"
         ]
         assert len(wd) == 3 and wd["repo"].notna().all()
+
+
+def test_session_open_runs_no_spark_job(
+    spark, index_dir, queries_pdf, tmp_path
+):
+    """Opening a QuerySession is metadata only (stats.json + a listing
+    of the tombstone part files), also over a tombstoned index; the
+    Spark work starts with warm() or the first query."""
+    import shutil as sh
+
+    from data_prepper_spark.index.query import QuerySession, delete_by_query
+
+    idx = str(tmp_path / "idx")
+    sh.copytree(index_dir, idx)
+    assert delete_by_query(spark, idx, queries_pdf["query"].iloc[0]) > 0
+    sc = spark.sparkContext
+    sc.setJobGroup("session_open", "QuerySession open")
+    try:
+        sess = QuerySession(spark, idx)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("session_open")) == []
+    assert len(sess.segments) == 1 and sess.segments[0].tombstones
 
 
 def test_phrase_search_exact_hits(spark, index_dir, fixture_dir, corpus_pdf):
@@ -1081,8 +1109,9 @@ def test_tombstones_visible_across_all_apis(spark, index_dir, fixture_dir,
     """ADVICE r03: delete_by_query must be honored by EVERY
     index-backed match path — not just topk. Tombstone a doc set,
     then assert phrase/boolean/expanded search, facets,
-    significant_terms, collapse, topk_one_cold exclude it, and that
-    QuerySession sees it after refresh()."""
+    significant_terms, collapse, topk_one_cold exclude it, and that a
+    warm QuerySession keeps its open-time view on BOTH its single-query
+    and batch paths until refresh(), then drops the docs on both."""
     import shutil as sh
 
     from collections import Counter
@@ -1126,18 +1155,21 @@ def test_tombstones_visible_across_all_apis(spark, index_dir, fixture_dir,
     n = delete_by_query(spark, idx, term)
     assert n == len(dead_ids) > 0
 
-    # snapshot: warm session still returns the dead docs...
+    # snapshot: the warm session still returns the dead docs, on the
+    # single-query and the batch path alike...
+    q1 = spark.createDataFrame([(0, term)], "query_id long, query string")
     still = sess.topk_one(term, k=10)
     assert list(still.doc_id) == list(pre.doc_id)
-    # ...until refresh
+    batch = sess.topk(q1, k=10).toPandas().sort_values("rank")
+    assert list(batch.doc_id) == list(still.doc_id)
+    # ...until refresh, which moves both
     sess.refresh()
     assert len(sess.topk_one(term, k=10)) == 0
+    assert sess.topk(q1, k=10).count() == 0
     sess.close()
 
     # stateless paths see the delete immediately
     assert len(topk_one_cold(spark, idx, term, k=10)) == 0
-
-    q1 = spark.createDataFrame([(0, term)], "query_id long, query string")
     assert topk(spark, idx, q1, k=10).count() == 0
 
     bq = spark.createDataFrame(
